@@ -26,9 +26,11 @@ dates, so this is unreachable in practice.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .functions import parse_iso_timestamp
 
@@ -106,12 +108,30 @@ MONDAY_SCHEMA = T.StructType(
 )
 
 
+_MONDAY_ARROW = to_arrow_schema(MONDAY_SCHEMA)
+
+
+def responses_df(spark: SparkSession, responses: list[dict]) -> DataFrame:
+    """GraphQL responses (dicts) → one nested row each, via one Arrow table.
+
+    The dicts are converted once, in Python, and the plan is a
+    ``LocalRelation``: each re-scan decodes Arrow instead of unpickling
+    Python rows. A wrong-typed value (an int where the schema says string)
+    raises ``ArrowTypeError`` rather than being coerced, and an empty list
+    gives an empty frame with the full nested schema. Independent of
+    ``spark.sql.execution.arrow.pyspark.enabled``.
+    """
+    table = pa.Table.from_pylist(responses, schema=_MONDAY_ARROW)
+    return spark.createDataFrame(table, schema=MONDAY_SCHEMA)
+
+
 def board_df(spark: SparkSession, response: dict) -> DataFrame:
-    """One GraphQL response (dict) → a 1-row nested DataFrame."""
+    """One GraphQL response (dict) → a 1-row nested DataFrame (Arrow-built,
+    see ``responses_df``)."""
     from .session import ensure_session_confs
 
     ensure_session_confs(spark)
-    return spark.createDataFrame([response], schema=MONDAY_SCHEMA)
+    return responses_df(spark, [response])
 
 
 def items_df(raw: DataFrame) -> DataFrame:

@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .io import write_historical, write_snapshot
 
@@ -105,17 +106,18 @@ def gated_dual_write(df: DataFrame, base_path: str, table: str,
         raise QualityGateViolation(table, violations, metrics)
 
     _promote_snapshot(spark, hist_path, os.path.join(base_path, table),
-                      run_date, df.columns)
+                      run_date, df.schema)
     return metrics
 
 
 def _promote_snapshot(spark: SparkSession, hist_path: str, snap_path: str,
-                      run_date: str, columns: list[str]) -> None:
+                      run_date: str, schema: StructType) -> None:
     """Copy the just-written day partition into the serving snapshot.
-    Partition pruning keeps the read to one day; selecting the original
-    column order restores the schema (partitionBy moves the partition
+    Partition pruning keeps the read to one day; reading with the writer's
+    schema skips the parquet footer-inference job, and selecting its
+    column order restores the layout (partitionBy moves the partition
     column last on disk)."""
-    day = spark.read.parquet(hist_path).filter(
+    day = spark.read.schema(schema).parquet(hist_path).filter(
         F.col("extraction_date") == F.lit(run_date).cast("date")
-    ).select(*columns)
+    ).select(*schema.names)
     write_snapshot(day, snap_path)

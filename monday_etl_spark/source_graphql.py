@@ -18,10 +18,14 @@ against a loopback mock server (tests/test_http_transport.py), which proves
 retry and pagination over a real socket while staying offline-safe.
 
 Scale note: extraction is driver-side here because a Monday board is small
-(hundreds of items). The 100 TB path is the documented upgrade: implement
-``pyspark.sql.datasource.DataSource`` (Spark 4 Python Data Source API) whose
-reader emits one InputPartition per (board, cursor-range) so executors fetch
-pages in parallel; everything downstream of ``pages_to_df`` is unchanged.
+(hundreds of items). The fetched pages become one ``pyarrow.Table`` that
+Spark holds as a local relation: converting the nested JSON happens once, and
+every later scan of the day's board (the daily run scans each board several
+times) decodes Arrow rather than unpickling Python rows. The 100 TB path is
+the documented upgrade: implement ``pyspark.sql.datasource.DataSource``
+(Spark 4 Python Data Source API) whose reader emits one InputPartition per
+(board, cursor-range) so executors fetch pages in parallel; everything
+downstream of ``pages_to_df`` is unchanged.
 """
 
 from __future__ import annotations
@@ -32,7 +36,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .normalize import MONDAY_SCHEMA, items_df
+from .normalize import items_df, responses_df
 
 Transport = Callable[[str], dict]
 """A transport takes a GraphQL query string and returns the decoded JSON."""
@@ -188,16 +192,17 @@ class MondayConnector:
 
 
 def pages_to_df(spark: SparkSession, pages: list[dict]) -> DataFrame:
-    """O-45 page union: all pages → one nested DataFrame → item rows.
+    """O-45 page union: all pages → one Arrow table → item rows.
 
-    Batched through a single ``createDataFrame`` (one row per page) rather
+    Batched through a single ``responses_df`` (one row per page) rather
     than a per-page union loop — the explode in ``items_df`` flattens pages
-    and items alike, and Spark sees one scan, not N unions.
+    and items alike, and Spark sees one scan, not N unions. The scan is an
+    Arrow-built ``LocalRelation``, so each of the daily run's re-scans (two
+    writes per table, two tables from the project board) decodes Arrow
+    instead of unpickling every nested page again. No pages give an empty
+    frame that still has the item columns.
     """
-    if not pages:
-        return spark.createDataFrame([], schema=MONDAY_SCHEMA)
-    raw = spark.createDataFrame(pages, schema=MONDAY_SCHEMA)
-    return items_df(raw)
+    return items_df(responses_df(spark, pages))
 
 
 def fetch_board_items(spark: SparkSession, connector: MondayConnector,

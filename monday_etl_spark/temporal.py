@@ -14,9 +14,10 @@ implementation of that lifecycle on Parquet:
   DataFrame builders; ``health_report`` collects them into a dict like the
   reference's report layer (driver-side by design — the inputs are 1-row DFs).
 
-Scale: historical tables are partitioned by extraction_date, so every
-latest/previous-day query prunes to 1-2 partitions regardless of history
-length; the quality probes aggregate map-side before any exchange.
+Scale: historical tables are partitioned by extraction_date, so a query
+that filters on a literal day prunes to that partition. The day-over-day
+compare does not: it aggregates every day of history, then joins the two
+latest days. The quality probes aggregate map-side before any exchange.
 """
 
 from __future__ import annotations
@@ -46,7 +47,8 @@ def compare_with_previous_day(hist: DataFrame, id_col: str, measure_col: str) ->
     (ref: compare_with_previous_day, monday_etl_automated.py:600-645).
 
     Works on any historical table with an ``extraction_date`` column. The
-    daily pre-aggregate prunes partitions and reduces before the tiny join.
+    daily pre-aggregate scans the whole history (the latest day is only
+    known after it), reducing it to one row per day before the tiny join.
     """
     daily = hist.groupBy("extraction_date").agg(
         F.countDistinct(id_col).alias("n_entities"),

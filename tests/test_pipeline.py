@@ -4,8 +4,11 @@ day-over-day stats. Mirrors the reference's production run shape
 
 from __future__ import annotations
 
+import pytest
+
 from monday_etl_spark import fixtures as FX
 from monday_etl_spark.pipeline import run_daily_etl
+from monday_etl_spark.quality import QualityGate, QualityGateViolation
 from monday_etl_spark.source_graphql import FixtureTransport, MondayConnector
 
 
@@ -52,3 +55,24 @@ def test_run_daily_etl_end_to_end(spark, tmp_path):
     run_daily_etl(spark, c, base, "2025-06-26", "2025-06-26 10:00:00")
     hist = spark.read.parquet(f"{base}/project_subitems_historical")
     assert hist.count() == 6  # 3 per day, not 9
+
+
+def test_empty_cost_board_reaches_the_row_floor(spark, tmp_path):
+    """A board with no items yields an empty table, not a crash: ungated it
+    records 0 rows, gated the row floor names the table."""
+    transport = MultiBoardTransport()
+    transport.routes["travel-board"] = {
+        "data": {"boards": [{"items_page": {"cursor": None, "items": []}}]}
+    }
+    c = MondayConnector(transport)
+
+    stats = run_daily_etl(spark, c, str(tmp_path / "ungated"), "2025-06-25",
+                          FX.RUN_TS)
+    assert stats["tables"]["travel_costs"] == 0
+    assert stats["tables"]["personnel_costs"] == 3
+
+    with pytest.raises(QualityGateViolation) as ex:
+        run_daily_etl(spark, c, str(tmp_path / "gated"), "2025-06-25",
+                      FX.RUN_TS, gate=QualityGate(min_rows=1))
+    assert ex.value.table == "travel_costs"
+    assert ex.value.violations == ["row count 0 below floor 1"]
