@@ -1,4 +1,5 @@
-"""Scalar function layer — SURVEY.md §2.8 (F-1..F-14).
+"""Shared scalar helpers — SURVEY.md §2.8. The cell-level parses (F-1, F-2,
+F-4, F-5) live inline in ``normalize``, where they run over cell arrays.
 
 All of these compile to built-in Catalyst expressions (zero Python UDFs), so
 they stay inside whole-stage codegen. Each helper documents the reference
@@ -10,45 +11,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# ---------------------------------------------------------------------------
-# F-1: null-safe string->float with default 0
-# (reference: float(text) in try/except -> 0; monday_etl_automated.py:305-309)
-# Non-ANSI cast yields NULL on garbage; coalesce applies the reference default.
-# ---------------------------------------------------------------------------
-
-
-def to_double_or_zero(col: Column) -> Column:
-    return F.coalesce(col.cast("double"), F.lit(0.0))
-
-
-# F-2: '%Y-%m-%d' date parse, null on failure (monday_etl_automated.py:263-267)
-def parse_date(col: Column) -> Column:
-    return F.to_date(col, "yyyy-MM-dd")
-
 
 # F-3: ISO-8601 'Z' timestamp parse (etl_final_fix.py:23-31)
 def parse_iso_timestamp(col: Column) -> Column:
     return F.to_timestamp(F.regexp_replace(col, "Z$", "+00:00"))
-
-
-# F-4: "start - end" two-field destructure; only when exactly 2 parts
-# (monday_etl_automated.py:312-319)
-def split_timeline(col: Column) -> tuple[Column, Column]:
-    parts = F.split(col, " - ")
-    ok = F.size(parts) == 2
-    start = F.when(ok, F.to_date(F.element_at(parts, 1), "yyyy-MM-dd"))
-    end = F.when(ok, F.to_date(F.element_at(parts, 2), "yyyy-MM-dd"))
-    return start, end
-
-
-# F-5: JSON path extraction (monday_etl_automated.py:390-395)
-def json_linked_id(col: Column) -> Column:
-    return F.get_json_object(col, "$.linkedPulseIds[0].linkedPulseId")
-
-
-# F-12: truthiness/empty-string guard (monday_etl_automated.py:259-261)
-def non_empty(col: Column) -> Column:
-    return F.nullif(F.trim(col), F.lit(""))
 
 
 # ---------------------------------------------------------------------------

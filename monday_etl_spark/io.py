@@ -114,16 +114,6 @@ def _resolve_schema(path: str, name: str):
     return schema
 
 
-def invalidate_schema_cache(sf_dir: str | None = None) -> None:
-    """Explicit hook for generators that rewrite table paths in-process
-    (the stat fingerprint already catches rewrites that touch mtime)."""
-    if sf_dir is None:
-        _SCHEMA_CACHE.clear()
-    else:
-        for k in [k for k in _SCHEMA_CACHE if k[0] == sf_dir]:
-            del _SCHEMA_CACHE[k]
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from .session import ensure_session_confs
 
@@ -138,16 +128,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = normalize_event_ts(df)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
-    """Expose the test tables as temp views so queries can be written in SQL."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
 
 
 def write_snapshot(df: DataFrame, path: str) -> None:

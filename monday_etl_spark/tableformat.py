@@ -25,10 +25,10 @@ Layout::
 - **File-reuse MERGE** (the Iceberg trick): ``merge_versioned`` writes ONLY
   the touched buckets' new files; the new manifest carries the untouched
   buckets' entries forward by reference. A merge touching 1% of keys
-  writes ~1% of the data and ZERO rewrites of the rest — strictly better
-  than the dynamic-partition-overwrite path in ``temporal``, which must
-  rewrite (though never re-read) untouched bytes of touched partitions'
-  siblings... and both old and new versions stay readable afterwards.
+  writes ~1% of the data and never reads, rewrites or copies the rest,
+  and both old and new versions stay readable afterwards. Every
+  file-rewriting mutator (merge/delete/compact/rebucket/zorder) commits
+  through the one ``_commit_rewrite`` path.
 - **Schema evolution**: ``merge_versioned(..., allow_schema_evolution=True)``
   widens the table with the update's new columns; the MANIFEST schema (not
   the parquet footers) governs every read, so files written before the
@@ -74,6 +74,7 @@ schema).
 from __future__ import annotations
 
 import contextlib
+import functools
 import glob as _glob
 import json
 import os
@@ -100,8 +101,8 @@ def _keys(key) -> list[str]:
 
 
 def _bucket_expr(key, n_buckets: int):
-    # must match temporal._bucket_expr for the single-key case: the layout
-    # hash is frozen on disk. Composite keys hash all columns together.
+    # frozen: house tables already on disk route their rows by this hash,
+    # so it must never change. Composite keys hash all columns together.
     return F.pmod(
         F.xxhash64(*[F.col(k) for k in _keys(key)]), F.lit(n_buckets)
     ).cast("int")
@@ -358,6 +359,19 @@ def _read_manifest(path: str, version: int) -> dict:
         return json.load(fh)
 
 
+def _resolve_manifest(path: str, version: int | None = None) -> dict:
+    """The manifest of ``version`` (default: the latest), raising
+    ``FileNotFoundError`` when the table has no committed version. Callers
+    take the version from ``man["version"]``, so the file list and the
+    schema they use come from one snapshot even if a commit lands
+    meanwhile."""
+    if version is None:
+        version = current_version(path)
+        if version is None:
+            raise FileNotFoundError(f"no committed version at {path}")
+    return _read_manifest(path, version)
+
+
 class LogStore:
     """The publish primitive — the ONLY coordination the format needs from
     its storage layer: atomically create ``final_path`` holding ``payload``
@@ -454,22 +468,27 @@ def _new_commit_dir(path: str, version: int) -> str:
     return os.path.join(path, _DATA, f"c{version:05d}-{uuid.uuid4().hex[:8]}")
 
 
-def _retrying_commit(fn, retries: int):
-    """Optimistic-concurrency retry: run ``fn`` (which must re-read
-    ``current_version`` itself — all the mutators here do, so each attempt
-    re-derives its merge against the NEW snapshot, never replays a stale
-    one), retrying on ``ConcurrentCommitError`` up to ``retries`` times.
-    This is the retry layer real formats add on top of the put-if-absent
-    primitive (Delta's ``txn.commit`` loop / Iceberg's
-    ``Tasks.retry``)."""
-    attempt = 0
-    while True:
-        try:
-            return fn()
-        except ConcurrentCommitError:
-            if attempt >= retries:
-                raise
-            attempt += 1
+def _retrying(fn):
+    """Optimistic-concurrency retry for a mutator: the decorated call takes
+    ``retries=N`` and re-runs ``fn`` on ``ConcurrentCommitError`` up to N
+    times. ``fn`` re-reads ``current_version`` itself — all the mutators
+    here do, so each attempt re-derives its change against the NEW
+    snapshot, never replays a stale one. This is the retry layer real
+    formats add on top of the put-if-absent primitive (Delta's
+    ``txn.commit`` loop / Iceberg's ``Tasks.retry``)."""
+
+    @functools.wraps(fn)
+    def retrying(*args, retries: int = 0, **kwargs):
+        attempt = 0
+        while True:
+            try:
+                return fn(*args, **kwargs)
+            except ConcurrentCommitError:
+                if attempt >= retries:
+                    raise
+                attempt += 1
+
+    return retrying
 
 
 def _bucket_files(commit_dir: str) -> dict[str, list[str]]:
@@ -560,15 +579,13 @@ def _footer_stats(root: str, rel_files: list[str],
     return out
 
 
-def _carry_stats(path: str, man_old: dict, new_buckets: dict,
-                 extra_cols: list[str] | None = None) -> dict | None:
-    """Stats map for a new commit: entries for files carried forward by
-    reference are copied from the old manifest; freshly-written files get
-    footer-read stats. Returns None when the table tracks no stats_cols."""
-    cols = list(man_old["spec"].get("stats_cols") or [])
-    for c in extra_cols or []:
-        if c not in cols:
-            cols.append(c)
+def _carry_stats(path: str, man_old: dict, spec: dict,
+                 new_buckets: dict) -> dict | None:
+    """Stats map for a new commit over ``spec``'s stats_cols: entries for
+    files carried forward by reference are copied from the old manifest;
+    freshly-written files get footer-read stats. Returns None when the spec
+    tracks no stats_cols."""
+    cols = spec.get("stats_cols")
     if not cols:
         return None
     old = man_old.get("stats", {})
@@ -616,6 +633,60 @@ def _distribute(bucketed: DataFrame, n_parts: int, distribution: str) -> DataFra
         raise ValueError(f"unknown distribution {distribution!r}; "
                          "use 'hash' or 'none'")
     return bucketed
+
+
+def _touched_buckets(df: DataFrame, key: list[str], n_buckets: int) -> list[int]:
+    """The distinct layout buckets ``df``'s keys hash to (bounded by
+    n_buckets — a few thousand ints, never data-sized)."""
+    return sorted(
+        r[0]
+        for r in df.select(_bucket_expr(key, n_buckets).alias("b"))
+        .distinct()
+        .collect()
+    )
+
+
+def _commit_rewrite(path: str, man: dict, frame: DataFrame, operation: str,
+                    touched: list[int] | None = None,
+                    spec: dict | None = None, schema: str | None = None,
+                    txn: tuple | None = None) -> int:
+    """Write ``frame`` and commit it as the version after ``man`` — the one
+    commit path of every file-rewriting mutator. ``frame`` is already in
+    its write layout and carries ``BUCKET_COL``; each caller keeps its own
+    layout step (``_distribute``, ``repartition`` or a range sort).
+
+    ``touched`` lists the buckets this commit rewrites: each takes the
+    files just written — or none, when the rewrite left it without rows
+    (carrying its old files forward would resurrect them) — and every
+    other bucket is carried forward by reference. ``touched=None`` is a
+    full rewrite: the new files are the whole table. ``spec`` and
+    ``schema`` default to ``man``'s; stats follow the new spec's
+    stats_cols. Returns the committed version."""
+    version = man["version"] + 1
+    commit_dir = _new_commit_dir(path, version)
+    frame.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(commit_dir)
+    written = _bucket_files(commit_dir)
+    if touched is None:
+        buckets = written
+    else:
+        buckets = dict(man["buckets"])
+        buckets.update({str(b): written.get(str(b), []) for b in touched})
+    spec = spec or man["spec"]
+    newman = {
+        "version": version,
+        "operation": operation,
+        "spec": spec,
+        "schema": schema or man.get("schema"),
+        "buckets": buckets,
+    }
+    _carry_naming(newman, man)
+    _stamp_txn(newman, txn)
+    _record_epoch(newman, man, commit_dir)
+    stats = _carry_stats(path, man, spec, buckets)
+    if stats is not None:
+        newman["stats"] = stats
+    _commit(path, newman)
+    return version
 
 
 def write_versioned(df: DataFrame, path: str, key,
@@ -875,7 +946,8 @@ def _metadata_only_manifest(man: dict, operation: str) -> dict:
     return new
 
 
-def rename_column(path: str, old: str, new: str, retries: int = 0) -> int:
+@_retrying
+def rename_column(path: str, old: str, new: str) -> int:
     """RENAME COLUMN as a metadata-only commit: the manifest schema renames
     the field (the column keeps its FIELD ID), records ``old`` as an alias
     for legacy readers, and rekeys any stats — no data file is touched, so
@@ -887,13 +959,7 @@ def rename_column(path: str, old: str, new: str, retries: int = 0) -> int:
     without field ids additionally block historical reuse — their reads
     resolve old files by name). Key columns rename cleanly (bucketing
     hashes values, not names)."""
-    if retries:
-        return _retrying_commit(
-            lambda: rename_column(path, old, new, retries=0), retries)
-    version = current_version(path)
-    if version is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    man = _read_manifest(path, version)
+    man = _resolve_manifest(path)
     live, retired = _live_and_retired_names(man)
     if old not in live:
         raise ValueError(f"no column {old!r} to rename (have {sorted(live)})")
@@ -936,19 +1002,14 @@ def rename_column(path: str, old: str, new: str, retries: int = 0) -> int:
     return newman["version"]
 
 
-def drop_column(path: str, col: str, retries: int = 0) -> int:
+@_retrying
+def drop_column(path: str, col: str) -> int:
     """DROP COLUMN as a metadata-only commit: the field leaves the manifest
     schema (reads stop requesting it — the bytes stay in old files until
     those files age out, exactly Iceberg's drop), its name and any prior
     names are retired against reuse, and its stats entries go. Key columns
     cannot be dropped (the layout hashes them)."""
-    if retries:
-        return _retrying_commit(
-            lambda: drop_column(path, col, retries=0), retries)
-    version = current_version(path)
-    if version is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    man = _read_manifest(path, version)
+    man = _resolve_manifest(path)
     live, _ = _live_and_retired_names(man)
     if col not in live:
         raise ValueError(f"no column {col!r} to drop (have {sorted(live)})")
@@ -993,10 +1054,7 @@ def read_key(spark: SparkSession, path: str, key_value,
     single-column keys or a tuple matching the composite key order; the real
     equality predicate is applied after pruning, so hash collisions only
     cost I/O, never correctness."""
-    version = version if version is not None else current_version(path)
-    if version is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    man = _read_manifest(path, version)
+    man = _resolve_manifest(path, version)
     key = _keys(man["spec"]["key"])
     vals = (key_value,) if not isinstance(key_value, (tuple, list)) \
         else tuple(key_value)
@@ -1021,7 +1079,7 @@ def read_key(spark: SparkSession, path: str, key_value,
         bucket = one.select(
             _bucket_expr(key, n_buckets).alias("b")
         ).collect()[0][0]
-    df = read_version(spark, path, version, buckets=[bucket])
+    df = read_version(spark, path, man["version"], buckets=[bucket])
     for k, v in zip(key, vals):
         df = df.filter(F.col(k) == F.lit(v))
     return df
@@ -1033,10 +1091,7 @@ def read_version(spark: SparkSession, path: str,
     """Read a table version (default: latest). ``buckets`` restricts the
     read to those buckets' files — file-level pruning off the manifest, no
     directory listing of the data tree."""
-    version = version if version is not None else current_version(path)
-    if version is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    man = _read_manifest(path, version)
+    man = _resolve_manifest(path, version)
     wanted = (
         man["buckets"]
         if buckets is None
@@ -1064,7 +1119,7 @@ def read_version(spark: SparkSession, path: str,
             # and with no recorded evolution they match the logical names
             return spark.read.parquet(*any_files).limit(0)
         raise FileNotFoundError(
-            f"version {version} at {path} is empty and its manifest "
+            f"version {man['version']} at {path} is empty and its manifest "
             "predates schema recording — cannot reconstruct the frame"
         )
     return spark.read.parquet(*files)
@@ -1080,10 +1135,7 @@ def table_health(path: str, version: int | None = None,
     Returns: n_buckets, n_files, total_bytes, small_files (< threshold),
     max_files_per_bucket, fragmented_buckets (file count > 1), versions
     retained, stats_cols tracked, and a compact-recommended flag."""
-    version = version if version is not None else current_version(path)
-    if version is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    man = _read_manifest(path, version)
+    man = _resolve_manifest(path, version)
     sizes = []
     per_bucket = {}
     for b, fs in man["buckets"].items():
@@ -1094,7 +1146,7 @@ def table_health(path: str, version: int | None = None,
     small = sum(1 for x in sizes if x < small_file_bytes)
     fragmented = sum(1 for c in per_bucket.values() if c > 1)
     return {
-        "version": version,
+        "version": man["version"],
         "n_buckets": len(man["buckets"]),
         "n_files": n_files,
         "total_bytes": sum(sizes),
@@ -1140,22 +1192,14 @@ def _files_for_ranges_man(man: dict, preds: dict) -> tuple[list[str], int]:
     return keep, pruned
 
 
-def _files_for_range_man(man: dict, col: str, lo, hi) -> tuple[list[str], int]:
-    """files_for_range over an already-read manifest (shared by read_where,
-    which needs the manifest again for its schema — one read, one version)."""
-    return _files_for_ranges_man(man, {col: (lo, hi)})
-
-
 def files_for_range(path: str, col: str, lo, hi,
                     version: int | None = None) -> tuple[list[str], int]:
     """Data skipping off the manifest: the version's files whose recorded
     [min, max] for ``col`` intersects [lo, hi] (closed interval), plus the
     count of files PRUNED. Files without recorded stats are always kept
     (skipping is an optimization, never a correctness filter)."""
-    version = version if version is not None else current_version(path)
-    if version is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    return _files_for_range_man(_read_manifest(path, version), col, lo, hi)
+    return _files_for_ranges_man(_resolve_manifest(path, version),
+                                 {col: (lo, hi)})
 
 
 def read_where(spark: SparkSession, path: str, col: str, lo, hi,
@@ -1165,18 +1209,32 @@ def read_where(spark: SparkSession, path: str, col: str, lo, hi,
     predicate. After ``optimize_zorder`` (tight per-file ranges on every
     clustered column) a narrow range touches O(matching files), not the
     table — Delta's OPTIMIZE ZORDER + data-skipping pair, manifest-side.
-    Correct with or without stats; stats only remove I/O.
+    Correct with or without stats; stats only remove I/O. The single-column
+    case of ``read_where_all``."""
+    return read_where_all(spark, path, {col: (lo, hi)}, version)
 
-    The version is resolved ONCE and the manifest read ONCE (file list and
-    schema come from the same snapshot): resolving twice, as before r06,
-    could pair version N's kept-file list with version N+1's schema when a
-    commit lands between the calls."""
-    version = version if version is not None else current_version(path)
-    if version is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    man = _read_manifest(path, version)
-    keep, _ = _files_for_range_man(man, col, lo, hi)
-    pred = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
+
+def read_where_all(spark: SparkSession, path: str, preds: dict,
+                   version: int | None = None) -> DataFrame:
+    """Conjunctive range read: ``preds`` maps column -> (lo, hi), all ANDed.
+    File skipping intersects every predicate's survivors in one manifest
+    pass — after a multi-column ``optimize_zorder`` a narrow N-dimensional
+    box touches O(matching files), where the best single-column prune would
+    still read every file matching that one column. Exact with or without
+    stats (the real predicate applies after pruning).
+
+    The version is resolved ONCE and the manifest read ONCE, so the kept
+    file list and the schema come from the same snapshot even when a commit
+    lands during the call."""
+    if not preds:
+        raise ValueError("read_where_all needs at least one (col, (lo, hi))")
+    man = _resolve_manifest(path, version)
+    keep, _ = _files_for_ranges_man(man, preds)
+    pred = functools.reduce(
+        lambda a, b: a & b,
+        [(F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi))
+         for c, (lo, hi) in preds.items()],
+    )
     schema_json = man.get("schema")
     from pyspark.sql.types import StructType
 
@@ -1201,50 +1259,10 @@ def read_where(spark: SparkSession, path: str, col: str, lo, hi,
     return spark.read.parquet(*paths).filter(pred)
 
 
-def read_where_all(spark: SparkSession, path: str, preds: dict,
-                   version: int | None = None) -> DataFrame:
-    """Conjunctive range read: ``preds`` maps column -> (lo, hi), all ANDed.
-    File skipping intersects every predicate's survivors in one manifest
-    pass — after a multi-column ``optimize_zorder`` a narrow N-dimensional
-    box touches O(matching files), where the best single-column prune would
-    still read every file matching that one column. Exact with or without
-    stats (the real predicate applies after pruning)."""
-    if not preds:
-        raise ValueError("read_where_all needs at least one (col, (lo, hi))")
-    version = version if version is not None else current_version(path)
-    if version is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    man = _read_manifest(path, version)
-    keep, _ = _files_for_ranges_man(man, preds)
-    from functools import reduce
-
-    pred = reduce(
-        lambda a, b: a & b,
-        [(F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi))
-         for c, (lo, hi) in preds.items()],
-    )
-    schema_json = man.get("schema")
-    from pyspark.sql.types import StructType
-
-    if not keep:
-        if schema_json is None:
-            raise FileNotFoundError(
-                f"range read at {path} pruned every file and the manifest "
-                "carries no schema: cannot build a typed empty result"
-            )
-        return spark.createDataFrame(
-            [], StructType.fromJson(json.loads(schema_json))
-        ).filter(pred)
-    paths = [os.path.join(path, f) for f in keep]
-    if schema_json is not None:
-        return _read_files_with_manifest_schema(spark, paths, man).filter(pred)
-    return spark.read.parquet(*paths).filter(pred)
-
-
+@_retrying
 def merge_versioned(spark: SparkSession, path: str,
                     updates: DataFrame,
                     allow_schema_evolution: bool = False,
-                    retries: int = 0,
                     txn: tuple | None = None,
                     distribution: str = "hash") -> int:
     """MERGE (upsert) as a new version: write ONLY the touched buckets'
@@ -1266,35 +1284,19 @@ def merge_versioned(spark: SparkSession, path: str,
     race the WHOLE merge re-derives against the new current version (the
     loser's data files become vacuum-collectable orphans), so a retried
     merge applies on top of the winner's changes — never instead of them."""
-    if retries:
-        return _retrying_commit(
-            lambda: merge_versioned(spark, path, updates,
-                                    allow_schema_evolution, retries=0,
-                                    txn=txn, distribution=distribution),
-            retries,
-        )
-    version = current_version(path)
-    if version is None:
-        raise FileNotFoundError(f"no committed version at {path}; "
-                                "write_versioned first")
-    man = _read_manifest(path, version)
+    man = _resolve_manifest(path)
     key = _keys(man["spec"]["key"])
     n_buckets = man["spec"]["n_buckets"]
-
-    touched = sorted(
-        r[0]
-        for r in updates.select(_bucket_expr(key, n_buckets).alias("b"))
-        .distinct()
-        .collect()
-    )
+    touched = _touched_buckets(updates, key, n_buckets)
     if not touched:
-        return version
+        return man["version"]
 
     # read_version returns plain data columns (explicit file reads carry no
     # directory-encoded partition column); the bucket is re-derived from the
     # key below — deterministic, so it always matches the on-disk layout
-    current = read_version(spark, path, version, buckets=touched)
-    if set(current.columns) != set(updates.columns):
+    current = read_version(spark, path, man["version"], buckets=touched)
+    evolving = set(current.columns) != set(updates.columns)
+    if evolving:
         if not allow_schema_evolution:
             raise ValueError(
                 "merge schema mismatch: table has "
@@ -1314,42 +1316,20 @@ def merge_versioned(spark: SparkSession, path: str,
                 "inside old files, so reusing one would resurrect old data — "
                 "pick fresh names"
             )
-        merged = current.join(
-            updates.select(*key), key, "left_anti"
-        ).unionByName(updates, allowMissingColumns=True)
-    else:
-        merged = current.join(updates.select(*key), key, "left_anti")             .unionByName(updates)
+    merged = current.join(updates.select(*key), key, "left_anti").unionByName(
+        updates, allowMissingColumns=evolving)
+    # the merged frame's schema — identical to the table's unless this
+    # merge evolved it (new columns appended)
+    schema = merged.schema.json()
     merged = merged.withColumn(BUCKET_COL, _bucket_expr(key, n_buckets))
-
-    new_version = version + 1
-    commit_dir = _new_commit_dir(path, new_version)
-    _distribute(merged, len(touched), distribution).write.mode(
-        "overwrite").partitionBy(BUCKET_COL).parquet(commit_dir)
-
-    buckets = dict(man["buckets"])  # untouched entries carried by reference
-    buckets.update(_bucket_files(commit_dir))
-    newman = {
-        "version": new_version,
-        "operation": "merge",
-        "spec": man["spec"],
-        # the merged frame's schema — identical to the table's unless this
-        # merge evolved it (new columns appended)
-        "schema": merged.drop(BUCKET_COL).schema.json(),
-        "buckets": buckets,
-    }
-    _carry_naming(newman, man)
-    _stamp_txn(newman, txn)
-    _record_epoch(newman, man, commit_dir)
-    stats = _carry_stats(path, man, buckets)
-    if stats is not None:
-        newman["stats"] = stats
-    _commit(path, newman)
-    return new_version
+    return _commit_rewrite(
+        path, man, _distribute(merged, len(touched), distribution), "merge",
+        touched, schema=schema, txn=txn)
 
 
+@_retrying
 def compact_versioned(spark: SparkSession, path: str,
-                      max_files_per_bucket: int = 1,
-                      retries: int = 0) -> int:
+                      max_files_per_bucket: int = 1) -> int:
     """OPTIMIZE-style compaction as a new version: rewrite every bucket
     whose file count exceeds ``max_files_per_bucket`` into freshly-packed
     files; carry already-compact buckets forward by reference. Returns the
@@ -1363,14 +1343,7 @@ def compact_versioned(spark: SparkSession, path: str,
     like merge, costs only the fragmented buckets' I/O. Readers pinned to
     older versions are unaffected; ``vacuum`` reclaims the fragmented
     originals once those versions age out."""
-    if retries:
-        return _retrying_commit(
-            lambda: compact_versioned(spark, path, max_files_per_bucket,
-                                      retries=0), retries)
-    version = current_version(path)
-    if version is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    man = _read_manifest(path, version)
+    man = _resolve_manifest(path)
     key = _keys(man["spec"]["key"])
     n_buckets = man["spec"]["n_buckets"]
 
@@ -1425,38 +1398,17 @@ def compact_versioned(spark: SparkSession, path: str,
         if len(fs) > max_files_per_bucket or stale(fs)
     )
     if not fragmented:
-        return version
+        return man["version"]
 
-    packed = read_version(spark, path, version, buckets=fragmented).withColumn(
-        BUCKET_COL, _bucket_expr(key, n_buckets)
-    )
-    new_version = version + 1
-    commit_dir = _new_commit_dir(path, new_version)
+    packed = read_version(
+        spark, path, man["version"], buckets=fragmented
+    ).withColumn(BUCKET_COL, _bucket_expr(key, n_buckets))
     # hash write distribution, same as the commit writers: buckets cluster
     # into write tasks, AQE splits any oversized bucket (see _distribute —
     # the plain repartition capped the rewrite at len(fragmented) tasks)
-    (
-        _distribute(packed, len(fragmented), "hash")
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(commit_dir)
-    )
-    buckets = dict(man["buckets"])
-    buckets.update(_bucket_files(commit_dir))
-    newman = {
-        "version": new_version,
-        "operation": "compact",
-        "spec": man["spec"],
-        "schema": man.get("schema"),
-        "buckets": buckets,
-    }
-    _carry_naming(newman, man)
-    _record_epoch(newman, man, commit_dir)
-    stats = _carry_stats(path, man, buckets)
-    if stats is not None:
-        newman["stats"] = stats
-    _commit(path, newman)
-    return new_version
+    return _commit_rewrite(
+        path, man, _distribute(packed, len(fragmented), "hash"), "compact",
+        fragmented)
 
 
 def version_as_of(path: str, ts: float) -> int:
@@ -1500,8 +1452,8 @@ def table_history(path: str) -> list[dict]:
     return out
 
 
-def rebucket_versioned(spark: SparkSession, path: str,
-                       n_buckets: int, retries: int = 0) -> int:
+@_retrying
+def rebucket_versioned(spark: SparkSession, path: str, n_buckets: int) -> int:
     """Bucket-layout evolution: rewrite the table under a new bucket count,
     committed as a row-identical new version whose spec governs all later
     MERGE/DELETE routing. The operational need is growth — a table laid out
@@ -1513,48 +1465,17 @@ def rebucket_versioned(spark: SparkSession, path: str,
     and merge resolve two layouts forever, and the rewrite cost is paid
     once at a moment the operator chooses. Earlier versions time-travel
     under their old layout; stats re-collect from the fresh footers."""
-    if retries:
-        return _retrying_commit(
-            lambda: rebucket_versioned(spark, path, n_buckets, retries=0),
-            retries)
-    version = current_version(path)
-    if version is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    man = _read_manifest(path, version)
+    man = _resolve_manifest(path)
     key = _keys(man["spec"]["key"])
     if n_buckets == man["spec"]["n_buckets"]:
-        return version
+        return man["version"]
 
-    df = read_version(spark, path, version).withColumn(
+    df = read_version(spark, path, man["version"]).withColumn(
         BUCKET_COL, _bucket_expr(key, n_buckets)
     )
-    new_version = version + 1
-    commit_dir = _new_commit_dir(path, new_version)
-    (
-        df.repartition(n_buckets, BUCKET_COL)
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(commit_dir)
-    )
-    buckets = _bucket_files(commit_dir)  # all-new layout, nothing carried
-    spec = dict(man["spec"])
-    spec["n_buckets"] = n_buckets
-    newman = {
-        "version": new_version,
-        "operation": "rebucket",
-        "spec": spec,
-        "schema": man.get("schema"),
-        "buckets": buckets,
-    }
-    _carry_naming(newman, man)
-    _record_epoch(newman, man, commit_dir)
-    if spec.get("stats_cols"):
-        newman["stats"] = _footer_stats(
-            path, [f for fs in buckets.values() for f in fs],
-            spec["stats_cols"],
-        )
-    _commit(path, newman)
-    return new_version
+    return _commit_rewrite(
+        path, man, df.repartition(n_buckets, BUCKET_COL), "rebucket",
+        spec={**man["spec"], "n_buckets": n_buckets})
 
 
 def vacuum(path: str, keep_last: int = 1,
@@ -1631,8 +1552,9 @@ def vacuum(path: str, keep_last: int = 1,
     return drop
 
 
+@_retrying
 def delete_versioned(spark: SparkSession, path: str,
-                     keys_df: DataFrame, retries: int = 0,
+                     keys_df: DataFrame,
                      distribution: str = "hash") -> int:
     """DELETE WHERE key IN (...) as a new version — the third leg of the
     MERGE DML triad. Same cost model as merge_versioned: only the buckets
@@ -1641,58 +1563,22 @@ def delete_versioned(spark: SparkSession, path: str,
     not present is a no-op for those keys. Returns the new version.
     ``retries`` re-derives the whole delete against the new snapshot on a
     lost commit race (see merge_versioned)."""
-    if retries:
-        return _retrying_commit(
-            lambda: delete_versioned(spark, path, keys_df, retries=0,
-                                     distribution=distribution),
-            retries,
-        )
-    version = current_version(path)
-    if version is None:
-        raise FileNotFoundError(f"no committed version at {path}; "
-                                "write_versioned first")
-    man = _read_manifest(path, version)
+    man = _resolve_manifest(path)
     key = _keys(man["spec"]["key"])
     n_buckets = man["spec"]["n_buckets"]
-
-    touched = sorted(
-        r[0]
-        for r in keys_df.select(_bucket_expr(key, n_buckets).alias("b"))
-        .distinct()
-        .collect()
-    )
+    touched = _touched_buckets(keys_df, key, n_buckets)
     if not touched:
-        return version
+        return man["version"]
 
-    current = read_version(spark, path, version, buckets=touched)
+    current = read_version(spark, path, man["version"], buckets=touched)
     kept = current.join(keys_df.select(*key), key, "left_anti").withColumn(
         BUCKET_COL, _bucket_expr(key, n_buckets)
     )
-    new_version = version + 1
-    commit_dir = _new_commit_dir(path, new_version)
-    _distribute(kept, len(touched), distribution).write.mode(
-        "overwrite").partitionBy(BUCKET_COL).parquet(commit_dir)
-
-    buckets = dict(man["buckets"])
-    # a bucket whose every row was deleted writes no directory: record it
-    # as EMPTY (not carried forward), or the old rows would resurrect
-    new_files = _bucket_files(commit_dir)
-    for b in touched:
-        buckets[str(b)] = new_files.get(str(b), [])
-    newman = {
-        "version": new_version,
-        "operation": "delete",
-        "spec": man["spec"],
-        "schema": man.get("schema"),
-        "buckets": buckets,
-    }
-    _carry_naming(newman, man)
-    _record_epoch(newman, man, commit_dir)
-    stats = _carry_stats(path, man, buckets)
-    if stats is not None:
-        newman["stats"] = stats
-    _commit(path, newman)
-    return new_version
+    # a bucket whose every row was deleted writes no directory; the commit
+    # records it as EMPTY, so the old rows do not resurrect
+    return _commit_rewrite(
+        path, man, _distribute(kept, len(touched), distribution), "delete",
+        touched)
 
 
 def diff_versions(spark: SparkSession, path: str,
@@ -1748,10 +1634,10 @@ def diff_versions(spark: SparkSession, path: str,
     return j.select(*out)
 
 
+@_retrying
 def optimize_zorder(spark: SparkSession, path: str, cols: list[str],
                     bits: int | None = None,
-                    files_per_bucket: int = 4,
-                    retries: int = 0) -> int:
+                    files_per_bucket: int = 4) -> int:
     """OPTIMIZE ... ZORDER BY for the versioned table: rewrite every bucket's
     files with rows sorted by the Morton z-value of ``cols``, committed as a
     new (row-identical) version. Bucketing by the entity key is preserved —
@@ -1768,21 +1654,12 @@ def optimize_zorder(spark: SparkSession, path: str, cols: list[str],
     scopes OPTIMIZE with a WHERE."""
     from .layout import DEFAULT_BITS, zorder_value
 
-    if retries:
-        return _retrying_commit(
-            lambda: optimize_zorder(spark, path, cols, bits,
-                                    files_per_bucket, retries=0), retries)
-    version = current_version(path)
-    if version is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    man = _read_manifest(path, version)
+    man = _resolve_manifest(path)
     key = _keys(man["spec"]["key"])
     n_buckets = man["spec"]["n_buckets"]
 
-    df = read_version(spark, path, version)
+    df = read_version(spark, path, man["version"])
     z = zorder_value(df, cols, bits or DEFAULT_BITS)
-    new_version = version + 1
-    commit_dir = _new_commit_dir(path, new_version)
     # range-partition on (bucket, z) so each bucket splits into
     # ``files_per_bucket`` z-CONTIGUOUS files: stats tightness comes from
     # file/row-group boundaries falling on narrow z ranges, which a single
@@ -1791,36 +1668,18 @@ def optimize_zorder(spark: SparkSession, path: str, cols: list[str],
     # per-bucket files (partitionBy), each covering only its task's narrow
     # z slice — tightness is preserved either way.
     slices = max(len(man["buckets"]), 1) * max(files_per_bucket, 1)
-    (
+    laid_out = (
         df.withColumn(BUCKET_COL, _bucket_expr(key, n_buckets))
         .withColumn("__z", z)
         .repartitionByRange(slices, BUCKET_COL, "__z")
         .sortWithinPartitions(BUCKET_COL, "__z")
         .drop("__z")
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(commit_dir)
     )
-    buckets = _bucket_files(commit_dir)
     # z-ordering is exactly what makes file-level min/max tight — start (or
     # keep) tracking stats on the clustered columns so read_where can skip
-    spec = dict(man["spec"])
-    spec["stats_cols"] = sorted(set(spec.get("stats_cols") or []) | set(cols))
-    newman = {
-        "version": new_version,
-        "operation": "zorder",
-        "spec": spec,
-        "schema": man.get("schema"),
-        "buckets": buckets,
-        "stats": _footer_stats(
-            path, [f for fs in buckets.values() for f in fs],
-            spec["stats_cols"],
-        ),
-    }
-    _carry_naming(newman, man)
-    _record_epoch(newman, man, commit_dir)
-    _commit(path, newman)
-    return new_version
+    stats_cols = sorted(set(man["spec"].get("stats_cols") or []) | set(cols))
+    return _commit_rewrite(path, man, laid_out, "zorder",
+                           spec={**man["spec"], "stats_cols": stats_cols})
 
 
 # ---------------------------------------------------------------------------

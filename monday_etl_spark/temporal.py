@@ -97,27 +97,20 @@ def latest_snapshot_view(hist: DataFrame, key: str,
 
 def merge_upsert(spark: SparkSession, path: str, updates: DataFrame,
                  key: str) -> None:
-    """Entity-level MERGE (upsert) on a parquet snapshot — the Delta-MERGE
-    alternative to partition overwrite (SURVEY §2.10): rows in ``updates``
-    replace same-key rows, others are kept.
+    """Entity-level MERGE (upsert) on a flat parquet snapshot — the
+    Delta-MERGE alternative to partition overwrite (SURVEY §2.10): rows in
+    ``updates`` replace same-key rows, others are kept.
 
-    Dispatches on the table layout: a snapshot written with
-    ``write_bucketed_snapshot`` (self-described by its ``_bucket_spec.json``)
-    merges through the partition-pruned path — cost proportional to touched
-    buckets, the plain-parquet shape of Delta's file-pruned MERGE INTO. A
-    flat snapshot falls back to the full read → anti-join → union → TEMP
-    sibling → swap. Writing the merged result to a new directory before
-    touching the old one means the source files still exist while any task
-    re-runs; relying on cache()+count() instead (the r01 approach) is unsafe
-    on a real cluster — cached blocks are not durable, and eviction or
-    executor loss would trigger recomputation from already-deleted files.
+    Full read → anti-join → union → TEMP sibling → swap. Writing the merged
+    result to a new directory before touching the old one means the source
+    files still exist while any task re-runs; relying on cache()+count()
+    instead (the r01 approach) is unsafe on a real cluster — cached blocks
+    are not durable, and eviction or executor loss would trigger
+    recomputation from already-deleted files. A bucket-pruned MERGE with
+    atomic commits and time travel is ``tableformat.merge_versioned``.
     """
-    import os
     import shutil
 
-    if _read_bucket_spec(path) is not None:
-        merge_upsert_bucketed(spark, path, updates)
-        return
     if os.path.exists(path):
         current = spark.read.parquet(path)
         kept = current.join(updates.select(key), key, "left_anti")
@@ -132,109 +125,6 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame,
         shutil.rmtree(old)
     else:
         updates.write.mode("overwrite").parquet(path)
-
-
-_BUCKET_SPEC = "_bucket_spec.json"
-_BUCKET_COL = "__bucket"
-
-
-def _bucket_expr(key: str, n_buckets: int):
-    # xxhash64: stable across Spark versions and sessions (unlike F.hash's
-    # seed-sensitive Murmur3 usage elsewhere it's fine, but the layout hash
-    # must never change once data is on disk)
-    return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-
-
-def _read_bucket_spec(path: str) -> dict | None:
-    import json
-
-    spec = os.path.join(path, _BUCKET_SPEC)
-    if not os.path.exists(spec):
-        return None
-    with open(spec) as fh:
-        return json.load(fh)
-
-
-def write_bucketed_snapshot(df: DataFrame, path: str, key: str,
-                            n_buckets: int = 64) -> None:
-    """Write a snapshot laid out for pruned merges: partitioned by
-    ``__bucket = pmod(xxhash64(key), n_buckets)`` and self-described by a
-    ``_bucket_spec.json`` so later merges (and readers) need no out-of-band
-    layout knowledge. At 100 TB, ``n_buckets`` sizes the unit of merge I/O —
-    pick it so one bucket (~table_size / n_buckets) is a comfortable
-    task-level rewrite, e.g. 4096 buckets over 100 TB = ~25 GB per bucket.
-
-    The spec file is written with the local ``open`` (same single-FS
-    assumption as the swap in ``merge_upsert``); on HDFS/S3 this becomes the
-    Hadoop FileSystem API or, properly, a Delta/Iceberg table."""
-    import json
-
-    (
-        df.withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
-        .write.mode("overwrite")
-        .partitionBy(_BUCKET_COL)
-        .parquet(path)
-    )
-    with open(os.path.join(path, _BUCKET_SPEC), "w") as fh:
-        json.dump({"key": key, "n_buckets": n_buckets}, fh)
-
-
-def read_bucketed_snapshot(spark: SparkSession, path: str) -> DataFrame:
-    """Read back a bucketed snapshot without the layout column."""
-    return spark.read.parquet(path).drop(_BUCKET_COL)
-
-
-def merge_upsert_bucketed(spark: SparkSession, path: str,
-                          updates: DataFrame) -> None:
-    """Partition-pruned MERGE on a ``write_bucketed_snapshot`` table.
-
-    1. Bucket the updates with the layout hash from ``_bucket_spec.json``
-       and collect the DISTINCT touched bucket ids (bounded by n_buckets —
-       a few thousand ints, never data-sized).
-    2. Scan ONLY those buckets (``__bucket IN (...)`` prunes at the
-       partition-directory level — check ``.explain``: PartitionFilters),
-       anti-join out the updated keys, union the updates back in.
-    3. Materialize to a TEMP sibling (Spark refuses to overwrite a path
-       it is reading — and the self-read would also be a correctness race),
-       then dynamic-partition-overwrite the touched buckets back into the
-       table. Untouched buckets are never read, never rewritten.
-
-    Cost is 1 pruned scan + 2 writes of the touched buckets only; a merge
-    touching 1% of keys rewrites ~1% of a 100 TB table instead of 100% (the
-    flat-path swap). Every touched bucket necessarily contains ≥1 update
-    row, so dynamic overwrite can never drop a partition to zero files.
-    """
-    import shutil
-
-    spec = _read_bucket_spec(path)
-    if spec is None:
-        raise ValueError(f"{path} is not a bucketed snapshot "
-                         f"(missing {_BUCKET_SPEC})")
-    key, n_buckets = spec["key"], spec["n_buckets"]
-
-    upd = updates.withColumn(_BUCKET_COL, _bucket_expr(key, n_buckets))
-    touched = [r[0] for r in upd.select(_BUCKET_COL).distinct().collect()]
-    if not touched:
-        return
-
-    current = spark.read.parquet(path).filter(F.col(_BUCKET_COL).isin(touched))
-    kept = current.join(upd.select(key), key, "left_anti")
-    merged = kept.unionByName(upd)
-
-    tmp = path.rstrip("/") + "__merge_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    try:
-        # partitionOverwriteMode=dynamic (session.py): overwrite replaces
-        # exactly the partitions present in the written frame — the touched
-        # buckets — and leaves every other bucket directory untouched
-        (
-            spark.read.parquet(tmp)
-            .write.mode("overwrite")
-            .partitionBy(_BUCKET_COL)
-            .parquet(path)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def check_duplicates(df: DataFrame, key: str) -> DataFrame:

@@ -77,6 +77,47 @@ def test_injected_conflict_raises_and_retry_recovers(spark, tmp_path,
         tf.create_tag(path, "rel")
 
 
+# every mutator: (call, the operation its manifest records)
+MUTATORS = {
+    "merge": (lambda spark, path, **kw: tf.merge_versioned(
+        spark, path, _df(spark, 5), **kw), "merge"),
+    "delete": (lambda spark, path, **kw: tf.delete_versioned(
+        spark, path, _df(spark, 5).select("id"), **kw), "delete"),
+    # max_files_per_bucket=0: every non-empty bucket needs rewriting
+    "compact": (lambda spark, path, **kw: tf.compact_versioned(
+        spark, path, max_files_per_bucket=0, **kw), "compact"),
+    "rebucket": (lambda spark, path, **kw: tf.rebucket_versioned(
+        spark, path, 8, **kw), "rebucket"),
+    "zorder": (lambda spark, path, **kw: tf.optimize_zorder(
+        spark, path, ["v"], **kw), "zorder"),
+    "rename": (lambda spark, path, **kw: tf.rename_column(
+        path, "v", "w", **kw), "rename"),
+    "drop": (lambda spark, path, **kw: tf.drop_column(
+        path, "v", **kw), "drop_column"),
+}
+
+
+@pytest.mark.parametrize("op", sorted(MUTATORS))
+def test_every_mutator_retries_a_lost_race(spark, tmp_path, _restore_store,
+                                           op):
+    """The retries= contract on all seven mutators: a lost race raises
+    without retries, and retries=1 re-derives and commits the next
+    version."""
+    call, operation = MUTATORS[op]
+    path = str(tmp_path / "t")
+    tf.write_versioned(_df(spark), path, key="id", n_buckets=4)
+
+    tf.set_log_store(ConflictOnceStore("v00002.json"))
+    with pytest.raises(tf.ConcurrentCommitError):
+        call(spark, path)
+    assert tf.current_version(path) == 1
+
+    tf.set_log_store(ConflictOnceStore("v00002.json"))
+    assert call(spark, path, retries=1) == 2
+    assert tf.current_version(path) == 2
+    assert tf._read_manifest(path, 2)["operation"] == operation
+
+
 def test_real_duplicate_still_conflicts(spark, tmp_path, _restore_store):
     """Same version + DIFFERENT content = a genuine lost race, always a
     conflict. Same version + byte-identical content = our own write whose

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
 
 import pyarrow.parquet as pq
 
@@ -18,14 +19,19 @@ def _rows(df):
 
 
 def _split_ingest(root, n=2):
+    """Split the events by ts into ``n`` files the stream drains in order.
+    The file source orders files by mtime, and back-to-back writes can
+    share one, so each part gets a strictly later mtime than the last."""
     ingest = os.path.join(root, "ingest")
     os.makedirs(ingest)
     t = pq.read_table(os.path.join(SF, "events.parquet")).sort_by("ts")
     step = t.num_rows // n
+    base = time.time() - n
     for i in range(n):
         end = t.num_rows if i == n - 1 else (i + 1) * step
-        pq.write_table(t.slice(i * step, end - i * step),
-                       os.path.join(ingest, f"part{i}.events.parquet"))
+        part = os.path.join(ingest, f"part{i}.events.parquet")
+        pq.write_table(t.slice(i * step, end - i * step), part)
+        os.utime(part, (base + i, base + i))
     return ingest
 
 
