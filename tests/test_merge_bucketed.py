@@ -1,35 +1,15 @@
-"""Partition-pruned MERGE on a key-bucketed parquet snapshot.
+"""Bucket-pruned MERGE on a key-bucketed house table.
 
-The scale contract under test: a merge touching a few keys must (a) produce
-exactly the rows a full MERGE INTO would, (b) physically rewrite ONLY the
-bucket partitions containing touched keys — untouched bucket files stay
-byte-identical on disk — and (c) be reachable transparently through
-``merge_upsert`` via the table's own ``_bucket_spec.json``.
+A merge that touches a few keys rewrites only their buckets (see
+``test_tableformat``); applying the same updates again must leave the same
+rows, not duplicates.
 """
 
 from __future__ import annotations
 
-import os
-from pathlib import Path
-
-from monday_etl_spark.temporal import (
-    merge_upsert,
-    merge_upsert_bucketed,
-    read_bucketed_snapshot,
-    write_bucketed_snapshot,
-)
+from monday_etl_spark.tableformat import merge_versioned, read_version, write_versioned
 
 N_BUCKETS = 8
-
-
-def _bucket_files(path: str) -> dict[str, tuple]:
-    """(relative parquet file -> (size, mtime_ns)) for every bucket dir."""
-    out = {}
-    for p in Path(path).rglob("*.parquet"):
-        rel = str(p.relative_to(path))
-        st = p.stat()
-        out[rel] = (st.st_size, st.st_mtime_ns)
-    return out
 
 
 def _base_df(spark):
@@ -39,72 +19,14 @@ def _base_df(spark):
     )
 
 
-def test_bucketed_merge_parity(spark, tmp_path):
-    path = str(tmp_path / "snap")
-    write_bucketed_snapshot(_base_df(spark), path, key="id", n_buckets=N_BUCKETS)
-
-    updates = spark.createDataFrame(
-        [(7, "name_7_v2", 700.0), (42, "name_42_v2", 4200.0),
-         (1000, "name_1000", 1000.0)],  # 1000 = brand-new key (insert)
-        "id bigint, name string, v double",
-    )
-    merge_upsert_bucketed(spark, path, updates)
-
-    got = {r.id: (r.name, r.v)
-           for r in read_bucketed_snapshot(spark, path).collect()}
-    assert len(got) == 201
-    assert got[7] == ("name_7_v2", 700.0)
-    assert got[42] == ("name_42_v2", 4200.0)
-    assert got[1000] == ("name_1000", 1000.0)
-    assert got[3] == ("name_3", 3.0)  # untouched row intact
-
-
-def test_bucketed_merge_prunes_untouched_partitions(spark, tmp_path):
-    path = str(tmp_path / "snap")
-    write_bucketed_snapshot(_base_df(spark), path, key="id", n_buckets=N_BUCKETS)
-    before = _bucket_files(path)
-
-    updates = spark.createDataFrame([(7, "x", 0.0)], "id bigint, name string, v double")
-    merge_upsert_bucketed(spark, path, updates)
-    after = _bucket_files(path)
-
-    # exactly one bucket (id=7's) may change; every other bucket's parquet
-    # files must be byte-identical AND not rewritten (same mtime)
-    changed_dirs = {
-        os.path.dirname(f)
-        for f in set(before) ^ set(after)
-        | {f for f in before.keys() & after.keys() if before[f] != after[f]}
-    }
-    assert len(changed_dirs) == 1, f"expected 1 rewritten bucket, got {changed_dirs}"
-
-    untouched = [f for f in before if os.path.dirname(f) not in changed_dirs]
-    assert untouched, "test needs multiple populated buckets"
-    for f in untouched:
-        assert before[f] == after[f], f"untouched bucket file rewritten: {f}"
-
-
-def test_merge_upsert_dispatches_on_layout(spark, tmp_path):
-    path = str(tmp_path / "snap")
-    write_bucketed_snapshot(_base_df(spark), path, key="id", n_buckets=N_BUCKETS)
-    before = _bucket_files(path)
-
-    updates = spark.createDataFrame([(7, "x", 0.0)], "id bigint, name string, v double")
-    # generic entrypoint must route to the pruned path via _bucket_spec.json
-    merge_upsert(spark, path, updates, key="id")
-    after = _bucket_files(path)
-
-    unchanged = [f for f in before.keys() & after.keys() if before[f] == after[f]]
-    assert unchanged, "bucketed dispatch didn't happen: every file rewritten"
-    got = {r.id: r.name for r in read_bucketed_snapshot(spark, path).collect()}
-    assert got[7] == "x" and got[3] == "name_3"
-
-
 def test_bucketed_merge_idempotent(spark, tmp_path):
-    path = str(tmp_path / "snap")
-    write_bucketed_snapshot(_base_df(spark), path, key="id", n_buckets=N_BUCKETS)
+    path = str(tmp_path / "tbl")
+    write_versioned(_base_df(spark), path, key="id", n_buckets=N_BUCKETS)
     updates = spark.createDataFrame([(7, "x", 0.0)], "id bigint, name string, v double")
-    merge_upsert_bucketed(spark, path, updates)
-    merge_upsert_bucketed(spark, path, updates)
-    df = read_bucketed_snapshot(spark, path)
+    merge_versioned(spark, path, updates)
+    once = sorted(read_version(spark, path).collect())
+    merge_versioned(spark, path, updates)
+    df = read_version(spark, path)
     assert df.count() == 200
     assert df.filter("id = 7").first().name == "x"
+    assert sorted(df.collect()) == once

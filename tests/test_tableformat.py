@@ -1,7 +1,7 @@
 """Manifest-versioned tables: the contracts that make it a table format.
 
 - merge parity: a versioned MERGE produces exactly the rows a full MERGE
-  INTO would, and applying the same updates twice leaves the same rows;
+  INTO would;
 - time travel: every retained version reads back byte-identical after later
   commits;
 - file reuse: the post-merge manifest references the SAME file paths for
@@ -60,11 +60,6 @@ def test_merge_parity_and_time_travel(spark, tmp_path):
     assert len(old) == 200
     assert old[7] == ("name_7", 7.0)
     assert 1000 not in old
-
-    # idempotent: applying the same updates again leaves the same rows
-    assert merge_versioned(spark, path, _updates(spark)) == 3
-    again = {r.id: (r.name, r.v) for r in read_version(spark, path).collect()}
-    assert again == latest
 
 
 def test_merge_reuses_untouched_files_by_reference(spark, tmp_path):
