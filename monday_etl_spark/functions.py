@@ -12,9 +12,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-# F-3: ISO-8601 'Z' timestamp parse (etl_final_fix.py:23-31)
-def parse_iso_timestamp(col: Column) -> Column:
-    return F.to_timestamp(F.regexp_replace(col, "Z$", "+00:00"))
+# F-3: ISO-8601 'Z' timestamp parse (etl_final_fix.py:23-31), as SQL text
+# for ``normalize``'s extractors
+def sql_parse_iso_timestamp(expr: str) -> str:
+    return f"to_timestamp(regexp_replace({expr}, 'Z$', '+00:00'))"
 
 
 # ---------------------------------------------------------------------------

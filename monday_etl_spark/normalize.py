@@ -6,6 +6,15 @@ UDFs, so the whole flatten+map+cast pipeline stays inside whole-stage codegen
 and scales linearly with executors (each item row is independent; no shuffle
 anywhere in this layer).
 
+The expression compiler emits Spark SQL text, not Column objects: every
+helper (``last_text``, ``last_number``, ``timeline_pair``, ``link_id``, ...)
+returns a string, and an extractor passes all its fields to one
+``selectExpr``. Building a Column tree from Python costs a py4j round trip
+per node (about 1,200 per extractor); the text costs a few dozen, and Spark
+parses it into the same expressions. Column keys are checked against
+``[A-Za-z0-9_]+`` and run stamps against a date/time charset before they are
+quoted into the text, so neither can escape its literal.
+
 Reference semantics reproduced exactly (SURVEY.md §2.2, O-5..O-11, F-1..F-5):
 - cells with empty/missing ``text`` are skipped entirely (:259-261);
 - value cells (text/number/date/timeline/link): LAST cell wins, but a cell
@@ -26,13 +35,15 @@ dates, so this is unreachable in practice.
 
 from __future__ import annotations
 
+import re
+
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from .functions import parse_iso_timestamp
+from .functions import sql_parse_iso_timestamp
 
 # ---------------------------------------------------------------------------
 # Raw response schema (FIXTURES.md §B; query shape monday_etl_automated.py:
@@ -144,49 +155,62 @@ def items_df(raw: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Cell-selection expression compiler (the declarative replacement for the
-# reference's if/elif dispatch tables — SURVEY §2.9 "extractor registry")
+# reference's if/elif dispatch tables — SURVEY §2.9 "extractor registry");
+# every helper returns Spark SQL text, see the module docstring
 # ---------------------------------------------------------------------------
 
 _DATE_FMT = "yyyy-MM-dd"
+_KEY = re.compile(r"[A-Za-z0-9_]+")
+# what Spark's string → date/timestamp casts can accept (digits, zone names,
+# separators); no quote or backslash, so the value cannot leave its literal
+_STAMP = re.compile(r"[A-Za-z0-9_/:.+\- ]*")
 
 
-def _cells(cv: Column, key: str, by_type: bool) -> Column:
+def _key(key: str) -> str:
+    """A column id or type, checked before it is quoted into SQL."""
+    if not _KEY.fullmatch(key):
+        raise ValueError(f"column key {key!r} must match [A-Za-z0-9_]+")
+    return key
+
+
+def _cells(cv: str, key: str, by_type: bool) -> str:
     """Cells matching the column id (O-7) or column type (O-8), with the
     non-empty-text guard (O-10) applied."""
-    tag = (lambda c: c["column"]["type"]) if by_type else (lambda c: c["id"])
-    return F.filter(cv, lambda c: (tag(c) == key) & c["text"].isNotNull() & (c["text"] != ""))
+    tag = "c.column.type" if by_type else "c.id"
+    return (f"filter({cv}, c -> {tag} = '{_key(key)}' "
+            "AND c.text IS NOT NULL AND c.text != '')")
 
 
-def last_text(cv: Column, key: str, by_type: bool = False) -> Column:
+def last_text(cv: str, key: str, by_type: bool = False) -> str:
     """Last non-empty text cell wins (reference loop overwrite order)."""
-    return F.element_at(_cells(cv, key, by_type), -1)["text"]
+    return f"element_at({_cells(cv, key, by_type)}, -1).text"
 
 
-def first_text(cv: Column, key: str, by_type: bool = False) -> Column:
+def first_text(cv: str, key: str, by_type: bool = False) -> str:
     """O-9 first-match-wins (subitem status, :320-322). element_at preserves
     array order, so this is exactly the reference's 'only set if unset'."""
-    return F.element_at(_cells(cv, key, by_type), 1)["text"]
+    return f"element_at({_cells(cv, key, by_type)}, 1).text"
 
 
-def last_number(cv: Column, key: str, by_type: bool = False) -> Column:
+def last_number(cv: str, key: str, by_type: bool = False) -> str:
     """F-1: last cell whose text casts to double; failed casts keep the
     previous value; default 0.0 (non-ANSI cast-to-null + coalesce)."""
-    ok = F.filter(
-        _cells(cv, key, by_type), lambda c: c["text"].cast("double").isNotNull()
-    )
-    return F.coalesce(F.element_at(ok, -1)["text"].cast("double"), F.lit(0.0))
+    ok = f"filter({_cells(cv, key, by_type)}, c -> CAST(c.text AS DOUBLE) IS NOT NULL)"
+    return f"coalesce(CAST(element_at({ok}, -1).text AS DOUBLE), 0.0D)"
 
 
-def last_date(cv: Column, key: str, by_type: bool = False) -> Column:
+def _to_date(text: str) -> str:
+    return f"to_date({text}, '{_DATE_FMT}')"
+
+
+def last_date(cv: str, key: str, by_type: bool = False) -> str:
     """F-2: last cell whose text parses as yyyy-MM-dd; null default."""
-    ok = F.filter(
-        _cells(cv, key, by_type),
-        lambda c: F.to_date(c["text"], _DATE_FMT).isNotNull(),
-    )
-    return F.to_date(F.element_at(ok, -1)["text"], _DATE_FMT)
+    ok = f"filter({_cells(cv, key, by_type)}, c -> {_to_date('c.text')} IS NOT NULL)"
+    return _to_date(f"element_at({ok}, -1).text")
 
 
-def timeline_pair(cv: Column, key: str = "timeline", by_type: bool = True):
+def timeline_pair(cv: str, key: str = "timeline", by_type: bool = True
+                  ) -> tuple[str, str]:
     """F-4: 'start - end' destructure (ref :313-319). The reference guards
     on exactly 2 split parts, then assigns start BEFORE parsing end inside
     one try block — so a 'valid-start - garbage' cell updates start while
@@ -194,53 +218,61 @@ def timeline_pair(cv: Column, key: str = "timeline", by_type: bool = True):
     halves filter independently). 1-part and 3+-part cells are skipped
     entirely by the len==2 guard."""
 
-    def start_ok(c: Column) -> Column:
-        parts = F.split(c["text"], " - ")
-        return (F.size(parts) == 2) & F.to_date(
-            F.element_at(parts, 1), _DATE_FMT
-        ).isNotNull()
+    def part(text: str, i: int) -> str:
+        return _to_date(f"element_at(split({text}, ' - '), {i})")
 
-    def end_ok(c: Column) -> Column:
-        parts = F.split(c["text"], " - ")
-        return (
-            (F.size(parts) == 2)
-            & F.to_date(F.element_at(parts, 1), _DATE_FMT).isNotNull()
-            & F.to_date(F.element_at(parts, 2), _DATE_FMT).isNotNull()
-        )
-
+    start_ok = f"size(split(c.text, ' - ')) = 2 AND {part('c.text', 1)} IS NOT NULL"
+    end_ok = f"{start_ok} AND {part('c.text', 2)} IS NOT NULL"
     cells = _cells(cv, key, by_type)
-    start_parts = F.split(F.element_at(F.filter(cells, start_ok), -1)["text"], " - ")
-    end_parts = F.split(F.element_at(F.filter(cells, end_ok), -1)["text"], " - ")
-    start = F.to_date(F.element_at(start_parts, 1), _DATE_FMT)
-    end = F.to_date(F.element_at(end_parts, 2), _DATE_FMT)
+    start = part(f"element_at(filter({cells}, c -> {start_ok}), -1).text", 1)
+    end = part(f"element_at(filter({cells}, c -> {end_ok}), -1).text", 2)
     return start, end
 
 
-_LINK_PATH = "$.linkedPulseIds[0].linkedPulseId"
+_LINK_PATH = "'$.linkedPulseIds[0].linkedPulseId'"
 
 
-def link_name(cv: Column, key: str) -> Column:
+def link_name(cv: str, key: str) -> str:
     """O-20 companion: display text of the last non-empty link cell."""
     return last_text(cv, key)
 
 
-def link_id(cv: Column, key: str) -> Column:
+def link_id(cv: str, key: str) -> str:
     """F-5: linked entity id from the value JSON of the last non-empty link
     cell whose JSON yields an id (malformed/{}/empty-list → null, :390-395)."""
-    ok = F.filter(
-        _cells(cv, key, False),
-        lambda c: F.get_json_object(c["value"], _LINK_PATH).isNotNull(),
-    )
-    return F.get_json_object(F.element_at(ok, -1)["value"], _LINK_PATH)
+    ok = (f"filter({_cells(cv, key, False)}, "
+          f"c -> get_json_object(c.value, {_LINK_PATH}) IS NOT NULL)")
+    return f"get_json_object(element_at({ok}, -1).value, {_LINK_PATH})"
 
 
-def lineage(run_date: str, run_ts: str) -> list[Column]:
+def _stamp(value: str) -> str:
+    """A run date/timestamp as a SQL string literal. Spark still casts it
+    exactly as a ``lit(value).cast(...)`` would; the check only rejects
+    characters no date or timestamp string contains."""
+    if not _STAMP.fullmatch(value):
+        raise ValueError(f"run date/timestamp {value!r} has characters outside "
+                         "[A-Za-z0-9_/:.+- ]")
+    return f"'{value}'"
+
+
+def lineage(run_date: str, run_ts: str) -> list[str]:
     """O-11 lineage stamps, injected as literals for deterministic re-runs
     (ref: self.extraction_date/timestamp, :52-53, :241-242)."""
     return [
-        F.lit(run_date).cast("date").alias("extraction_date"),
-        F.lit(run_ts).cast("timestamp").alias("extraction_timestamp"),
+        f"CAST({_stamp(run_date)} AS DATE) AS extraction_date",
+        f"CAST({_stamp(run_ts)} AS TIMESTAMP) AS extraction_timestamp",
     ]
+
+
+def _timestamps(prefix: str = "") -> list[str]:
+    """F-3 created/updated stamps of an item (or of ``prefix`` subitems)."""
+    return [f"{sql_parse_iso_timestamp(prefix + c)} AS {c}"
+            for c in ("created_at", "updated_at")]
+
+
+def _fields(**exprs: str) -> list[str]:
+    """``alias=sql`` pairs as ``sql AS `alias``` select items."""
+    return [f"{sql} AS `{alias}`" for alias, sql in exprs.items()]
 
 
 # ---------------------------------------------------------------------------
@@ -250,98 +282,101 @@ def lineage(run_date: str, run_ts: str) -> list[Column]:
 
 def extract_projects(items: DataFrame, run_date: str, run_ts: str) -> DataFrame:
     """EAV→wide by column id (O-7; dispatch table :257-277)."""
-    cv = F.col("column_values")
-    return items.select(
+    cv = "column_values"
+    return items.selectExpr(
         *lineage(run_date, run_ts),
-        F.col("id").alias("project_id"),
-        F.col("name").alias("project_name"),
-        last_text(cv, "person").alias("po"),
-        last_date(cv, "date4").alias("data_avvio"),
-        last_text(cv, "status__1").alias("var_non_var"),
-        last_text(cv, "status_1").alias("circolo"),
-        last_text(cv, "status0").alias("tipologia"),
-        last_text(cv, "status1").alias("stato_pipeline"),
-        last_text(cv, "status6").alias("aperto_chiuso"),
-        parse_iso_timestamp(F.col("created_at")).alias("created_at"),
-        parse_iso_timestamp(F.col("updated_at")).alias("updated_at"),
+        *_fields(
+            project_id="id",
+            project_name="name",
+            po=last_text(cv, "person"),
+            data_avvio=last_date(cv, "date4"),
+            var_non_var=last_text(cv, "status__1"),
+            circolo=last_text(cv, "status_1"),
+            tipologia=last_text(cv, "status0"),
+            stato_pipeline=last_text(cv, "status1"),
+            aperto_chiuso=last_text(cv, "status6"),
+        ),
+        *_timestamps(),
     )
 
 
 def extract_subitems(items: DataFrame, run_date: str, run_ts: str) -> DataFrame:
     """O-6 child-array flatten with inherited parent FK (join-free
     denormalization, O-19 :288) + EAV→wide by column *type* (O-8 :300-322)."""
-    s = items.select(
-        F.col("id").alias("project_id"), F.explode("subitems").alias("s")
-    )
-    cv = F.col("s.column_values")
+    s = items.selectExpr("id AS project_id", "explode(subitems) AS s")
+    cv = "s.column_values"
     start, end = timeline_pair(cv)
-    return s.select(
+    return s.selectExpr(
         *lineage(run_date, run_ts),
-        F.col("s.id").alias("subitem_id"),
-        "project_id",
-        F.col("s.name").alias("subitem_name"),
-        last_text(cv, "person", by_type=True).alias("po"),
-        start.alias("timeline_start"),
-        end.alias("timeline_end"),
-        last_number(cv, "numbers", by_type=True).alias("revenue_amount"),
-        first_text(cv, "status", by_type=True).alias("status"),
-        # declared in the target schema but never mapped by the reference
-        F.lit(None).cast("string").alias("tipologia"),
-        parse_iso_timestamp(F.col("s.created_at")).alias("created_at"),
-        parse_iso_timestamp(F.col("s.updated_at")).alias("updated_at"),
+        *_fields(
+            subitem_id="s.id",
+            project_id="project_id",
+            subitem_name="s.name",
+            po=last_text(cv, "person", by_type=True),
+            timeline_start=start,
+            timeline_end=end,
+            revenue_amount=last_number(cv, "numbers", by_type=True),
+            status=first_text(cv, "status", by_type=True),
+            # declared in the target schema but never mapped by the reference
+            tipologia="CAST(NULL AS STRING)",
+        ),
+        *_timestamps("s."),
     )
 
 
 def extract_personnel_costs(items: DataFrame, run_date: str, run_ts: str) -> DataFrame:
     """Personnel-cost mapping (:335-402): person, amount, board_relation1."""
-    cv = F.col("column_values")
-    return items.select(
+    cv = "column_values"
+    return items.selectExpr(
         *lineage(run_date, run_ts),
-        F.col("id").alias("cost_id"),
-        F.col("name").alias("cost_name"),
-        last_text(cv, "person").alias("person"),
-        last_number(cv, "numbers").alias("amount"),
-        link_id(cv, "board_relation1").alias("linked_subitem_id"),
-        link_name(cv, "board_relation1").alias("linked_subitem_name"),
-        parse_iso_timestamp(F.col("created_at")).alias("created_at"),
-        parse_iso_timestamp(F.col("updated_at")).alias("updated_at"),
+        *_fields(
+            cost_id="id",
+            cost_name="name",
+            person=last_text(cv, "person"),
+            amount=last_number(cv, "numbers"),
+            linked_subitem_id=link_id(cv, "board_relation1"),
+            linked_subitem_name=link_name(cv, "board_relation1"),
+        ),
+        *_timestamps(),
     )
 
 
 def extract_travel_costs(items: DataFrame, run_date: str, run_ts: str) -> DataFrame:
     """Travel-cost mapping (:404-482): + date, stato, pagata_con;
     link via board_relation39."""
-    cv = F.col("column_values")
-    return items.select(
+    cv = "column_values"
+    return items.selectExpr(
         *lineage(run_date, run_ts),
-        F.col("id").alias("cost_id"),
-        F.col("name").alias("cost_name"),
-        last_text(cv, "person").alias("person"),
-        last_number(cv, "numbers").alias("amount"),
-        last_date(cv, "date").alias("date"),
-        last_text(cv, "status").alias("stato"),
-        last_text(cv, "dropdown").alias("pagata_con"),
-        link_id(cv, "board_relation39").alias("linked_subitem_id"),
-        link_name(cv, "board_relation39").alias("linked_subitem_name"),
-        parse_iso_timestamp(F.col("created_at")).alias("created_at"),
-        parse_iso_timestamp(F.col("updated_at")).alias("updated_at"),
+        *_fields(
+            cost_id="id",
+            cost_name="name",
+            person=last_text(cv, "person"),
+            amount=last_number(cv, "numbers"),
+            date=last_date(cv, "date"),
+            stato=last_text(cv, "status"),
+            pagata_con=last_text(cv, "dropdown"),
+            linked_subitem_id=link_id(cv, "board_relation39"),
+            linked_subitem_name=link_name(cv, "board_relation39"),
+        ),
+        *_timestamps(),
     )
 
 
 def extract_supplier_costs(items: DataFrame, run_date: str, run_ts: str) -> DataFrame:
     """Supplier-cost mapping (:484-560): imponibile, iva, tipologia,
     stato_ordine; link via board_relation."""
-    cv = F.col("column_values")
-    return items.select(
+    cv = "column_values"
+    return items.selectExpr(
         *lineage(run_date, run_ts),
-        F.col("id").alias("cost_id"),
-        F.col("name").alias("cost_name"),
-        last_number(cv, "numbers").alias("imponibile"),
-        last_text(cv, "status").alias("tipologia"),
-        last_text(cv, "status_1").alias("stato_ordine"),
-        last_number(cv, "numbers8").alias("iva"),
-        link_id(cv, "board_relation").alias("linked_subitem_id"),
-        link_name(cv, "board_relation").alias("linked_subitem_name"),
-        parse_iso_timestamp(F.col("created_at")).alias("created_at"),
-        parse_iso_timestamp(F.col("updated_at")).alias("updated_at"),
+        *_fields(
+            cost_id="id",
+            cost_name="name",
+            imponibile=last_number(cv, "numbers"),
+            tipologia=last_text(cv, "status"),
+            stato_ordine=last_text(cv, "status_1"),
+            iva=last_number(cv, "numbers8"),
+            linked_subitem_id=link_id(cv, "board_relation"),
+            linked_subitem_name=link_name(cv, "board_relation"),
+        ),
+        *_timestamps(),
     )

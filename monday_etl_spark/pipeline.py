@@ -5,21 +5,31 @@ Stage mapping:
   reference                      | here
   -------------------------------+------------------------------------------
   DDL create-if-not-exists       | implicit: parquet dirs + partitionBy
-  4 GraphQL extracts (row loops) | MondayConnector fetch -> nested DF
-  transform (list[dict] loops)   | normalize.extract_* Catalyst expressions
-  load x5 (truncate + append)    | temporal.dual_write (idempotent)
+  4 GraphQL extracts (row loops) | MondayConnector fetch -> nested DF, serial
+  transform (list[dict] loops)   | normalize.extract_* (one SQL text a field)
+  load x5 (truncate + append)    | temporal.dual_write (idempotent), the five
+                                 | tables loaded concurrently
   compare_with_previous_day      | temporal.compare_with_previous_day
   send_notification              | returned stats dict (transport-agnostic)
 
 The IR between stages is a lazy DataFrame (Catalyst logical plan) instead of
 driver-memory lists — extraction/transform/write all execute on executors;
 only the final 1-row stats reach the driver.
+
+Boards are fetched one after another on the calling thread, in a fixed
+order: a transport is not assumed thread-safe, and a retrying one may
+depend on call order. The plans are built there too. Only the loads run
+concurrently, one thread per table, each carrying the caller's job group,
+description and job tags; a load is two short jobs plus their driver
+commits, so overlapping them keeps the cores busy during each commit.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,9 +69,15 @@ def run_daily_etl(
 
     With ``gate`` set, each table's write goes through the quality-gated
     path (quality.py): metrics observe on the historical write and the
-    serving snapshot is only promoted when thresholds hold —
-    QualityGateViolation aborts the run with the failing table quarantined.
-    ``gate_measures`` maps table name → coverage measure column."""
+    serving snapshot is only promoted when thresholds hold.
+    ``gate_measures`` maps table name → coverage measure column.
+
+    The five loads run concurrently and each table is gated and promoted
+    on its own, so tables after a failing one are loaded too. Once every
+    load has finished, the error of the first failing table in the fixed
+    order (projects, project_subitems, personnel_costs, travel_costs,
+    supplier_costs) is raised — a ``QualityGateViolation`` with that table
+    quarantined when gated — and no day-over-day stats are computed."""
     boards = boards or BoardConfig()
     gate_measures = gate_measures or {}
 
@@ -80,22 +96,28 @@ def run_daily_etl(
         ),
     }
 
-    stats: dict = {"run_date": run_date, "tables": {}}
-    for name, df in tables.items():
+    def load(name: str, df: DataFrame) -> dict:
         # O-27 as df.observe: run stats piggyback on the write pass instead
         # of a separate count scan (ref keeps driver-side fold stats,
         # monday_etl_automated.py:326-328; SURVEY §2.4 suggests observe)
         if gate is not None:
-            metrics = gated_dual_write(
-                df, base_path, name, gate, run_date,
-                measure_col=gate_measures.get(name),
-            )
-            stats["tables"][name] = metrics["n_rows"]
-            stats.setdefault("quality", {})[name] = metrics
-        else:
-            obs = Observation(f"stats_{name}_{run_date}")
-            dual_write(df.observe(obs, F.count(F.lit(1)).alias("n")), base_path, name)
-            stats["tables"][name] = obs.get["n"]
+            return gated_dual_write(df, base_path, name, gate, run_date,
+                                    measure_col=gate_measures.get(name))
+        obs = Observation(f"stats_{name}_{run_date}")
+        dual_write(df.observe(obs, F.count(F.lit(1)).alias("n")), base_path, name)
+        return {"n_rows": obs.get["n"]}
+
+    # each target is wrapped here, on the calling thread, so it gets its own
+    # copy of the caller's local properties and tags
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        loads = {name: pool.submit(inheritable_thread_target(spark)(load), name, df)
+                 for name, df in tables.items()}
+    metrics = {name: fut.result() for name, fut in loads.items()}
+
+    stats: dict = {"run_date": run_date,
+                   "tables": {name: m["n_rows"] for name, m in metrics.items()}}
+    if gate is not None:
+        stats["quality"] = metrics
 
     dod = compare_with_previous_day(
         read_historical(spark, base_path, "project_subitems"),

@@ -21,7 +21,10 @@ Scale note: extraction is driver-side here because a Monday board is small
 (hundreds of items). The fetched pages become one ``pyarrow.Table`` that
 Spark holds as a local relation: converting the nested JSON happens once, and
 every later scan of the day's board (the daily run scans each board several
-times) decodes Arrow rather than unpickling Python rows. The 100 TB path is
+times) decodes Arrow rather than unpickling Python rows. ``run_daily_etl``
+fetches its boards one after another on the calling thread, because a
+transport is not assumed thread-safe, and only then loads the five tables
+concurrently. The 100 TB path is
 the documented upgrade: implement ``pyspark.sql.datasource.DataSource``
 (Spark 4 Python Data Source API) whose reader emits one InputPartition per
 (board, cursor-range) so executors fetch pages in parallel; everything

@@ -76,3 +76,62 @@ def test_empty_cost_board_reaches_the_row_floor(spark, tmp_path):
                       FX.RUN_TS, gate=QualityGate(min_rows=1))
     assert ex.value.table == "travel_costs"
     assert ex.value.violations == ["row count 0 below floor 1"]
+
+
+def test_gate_failures_raise_the_first_table_in_order(spark, tmp_path):
+    """Each table is gated and promoted on its own: with the travel and
+    supplier boards both empty, the run raises travel's violation (the
+    first failing table in the fixed order), the other three snapshots are
+    promoted, and neither failing table gets a snapshot."""
+    import os
+
+    empty = {"data": {"boards": [{"items_page": {"cursor": None, "items": []}}]}}
+    transport = MultiBoardTransport()
+    transport.routes["travel-board"] = empty
+    transport.routes["supplier-board"] = empty
+    base = str(tmp_path)
+
+    with pytest.raises(QualityGateViolation) as ex:
+        run_daily_etl(spark, MondayConnector(transport), base, "2025-06-25",
+                      FX.RUN_TS, gate=QualityGate(min_rows=1))
+    assert ex.value.table == "travel_costs"
+    for name, rows in (("projects", 3), ("project_subitems", 3),
+                       ("personnel_costs", 3)):
+        assert spark.read.parquet(os.path.join(base, name)).count() == rows
+    for name in ("travel_costs", "supplier_costs"):
+        assert not os.path.exists(os.path.join(base, name))
+
+
+def test_loads_inherit_the_callers_job_group_and_tags(spark, tmp_path):
+    """Every load job of an ungated run runs under the caller's job group
+    and carries its job tag, though the loads run on worker threads; the
+    wrapper is given the session, so PySpark does not warn that tags are
+    lost."""
+    import warnings
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group, tag = "daily-etl-attribution", "daily_etl_attribution"
+    sc.setJobGroup(group, "daily run")
+    spark.addTag(tag)
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            run_daily_etl(spark, MondayConnector(MultiBoardTransport()),
+                          str(tmp_path), "2025-06-25", FX.RUN_TS)
+    finally:
+        spark.removeTag(tag)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    # 5 tables x (snapshot + historical write), then the day-over-day
+    # compare, which starts only after every load has finished
+    assert len(jobs) > 10
+    store = sc._jsc.sc().statusStore()
+    for jid in jobs[:10]:
+        assert tag in store.job(jid).jobTags().mkString(","), jid
