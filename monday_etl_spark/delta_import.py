@@ -1666,12 +1666,14 @@ def upsert_delta(spark: SparkSession, df: DataFrame, path: str,
                  txn_version: int | None = None) -> int:
     """MERGE-shaped upsert: source rows REPLACE matched target rows (by
     ``key_cols``) and INSERT otherwise — delta-spark's copy-on-write
-    MERGE without a not-matched-by-source clause, in ONE commit. Only
-    files that actually CONTAIN a matched key are rewritten: their
-    surviving rows move to fresh files (existing deletion vectors
-    applied and cleared by the rewrite), the source lands whole as new
-    files, and untouched files stay referenced — cost tracks the
-    matched-file set, not the table. Change Data Feed tables also get
+    MERGE without a not-matched-by-source clause, in ONE commit and two
+    passes: pass 1 collects the files that CONTAIN a matched key, pass 2
+    writes ``survivors ∪ source`` once (survivors: those files' rows,
+    deletion vectors applied, whose key the source lacks). No probe job,
+    no second write; untouched files stay referenced, so cost tracks the
+    matched-file set, not the table. Both passes scan the snapshot the
+    commit builds on, so a commit landing in between makes the put lose
+    its race (``FileExistsError``). Change Data Feed tables also get
     ``_change_data`` rows (``update_preimage``/``update_postimage`` for
     matched keys, ``insert`` for the rest) + cdc actions, so
     :func:`delta_cdf.read_delta_changes` serves the commit exactly.
@@ -1722,40 +1724,32 @@ def upsert_delta(spark: SparkSession, df: DataFrame, path: str,
     part_cols = meta.get("partitionColumns") or []
     cols = [f.name for f in schema.fields]
     src = df.select(*cols)
-    src_keys = src.select(*key_cols).distinct()
+    # keys are unique (checked above) and semi/anti joins ignore
+    # duplicates anyway: no distinct, so a small source broadcasts
+    src_keys = src.select(*key_cols)
 
-    tgt = read_delta(spark, path, _with_provenance=True)
+    # pass 1: the files holding a matched key
+    tgt = read_delta(spark, path, version=latest, _with_provenance=True)
     matched = tgt.join(src_keys, key_cols, "left_semi")
     affected_abs = [r["__dv_src"] for r in
                     matched.select("__dv_src").distinct().collect()]
-
-    adds_all = snap.live.materialize(allow_dv=True)
-    by_norm: dict[str, str] = {}
-    for rel in adds_all:
+    rel_of: dict[str, str] = {}
+    for rel in snap.live.materialize(allow_dv=True):
         dec = urllib.parse.unquote(rel)
-        absf = os.path.abspath(
-            dec if os.path.isabs(dec) else os.path.join(path, dec))
-        by_norm[absf] = rel
-    affected_rel = sorted(by_norm[a] for a in affected_abs)
+        rel_of[os.path.abspath(
+            dec if os.path.isabs(dec) else os.path.join(path, dec))] = rel
 
-    def _write_rows(rows: DataFrame, tag: str) -> list[dict]:
-        rel_dir = f"_data_m{latest + 1}-{tag}-{uuid.uuid4().hex[:8]}"
-        w = rows.select(*cols).write
-        if part_cols:
-            w = w.partitionBy(*part_cols)
-        w.parquet(os.path.join(path, rel_dir))
-        return _collect_written_adds(
-            os.path.join(path, rel_dir), rel_dir, part_cols, spark=spark)
-
-    adds: list[dict] = []
-    if affected_abs:
-        paths_df = spark.createDataFrame(
-            [(p,) for p in affected_abs], "__dv_src string")
-        survivors = (tgt.join(F.broadcast(paths_df), "__dv_src")
-                     .join(src_keys, key_cols, "left_anti"))
-        if survivors.take(1):
-            adds += _write_rows(survivors, "keep")
-    adds += _write_rows(src, "new")
+    # pass 2: source first, as a write's first task emits a file even
+    # when empty and a survivors task may be
+    survivors = (tgt.filter(F.col("__dv_src").isin(affected_abs))
+                 .join(src_keys, key_cols, "left_anti"))
+    rel_dir = f"_data_m{latest + 1}-{uuid.uuid4().hex[:8]}"
+    w = src.unionByName(survivors.select(*cols)).write
+    if part_cols:
+        w = w.partitionBy(*part_cols)
+    w.parquet(os.path.join(path, rel_dir))
+    adds = _collect_written_adds(
+        os.path.join(path, rel_dir), rel_dir, part_cols, spark=spark)
 
     cdc_actions: list[dict] = []
     if conf.get("delta.enableChangeDataFeed") == "true":
@@ -1790,7 +1784,7 @@ def upsert_delta(spark: SparkSession, df: DataFrame, path: str,
             "engineInfo": "monday-etl-spark delta bridge",
         }
     }] + cdc_actions
-    for rel in affected_rel:
+    for rel in sorted(rel_of[a] for a in affected_abs):
         actions.append({"remove": {"path": rel, "dataChange": True,
                                    "deletionTimestamp": now_ms}})
     actions += [{"add": a} for a in adds]
