@@ -1739,8 +1739,8 @@ def upsert_delta(spark: SparkSession, df: DataFrame, path: str,
         rel_of[os.path.abspath(
             dec if os.path.isabs(dec) else os.path.join(path, dec))] = rel
 
-    # pass 2: source first, as a write's first task emits a file even
-    # when empty and a survivors task may be
+    # pass 2: one write of source and survivors; a task with no rows may
+    # still emit an empty file, which is dropped before the commit
     survivors = (tgt.filter(F.col("__dv_src").isin(affected_abs))
                  .join(src_keys, key_cols, "left_anti"))
     rel_dir = f"_data_m{latest + 1}-{uuid.uuid4().hex[:8]}"
@@ -1814,7 +1814,10 @@ def _collect_written_adds(
     null marker maps back to None). Footer row counts (the stats field)
     read on EXECUTORS above a few hundred files when ``spark`` is given —
     a high-cardinality partitionBy write emits one file per tuple, and
-    the driver must not open them serially."""
+    the driver must not open them serially. Files with no rows are
+    deleted, not added: Spark's writer emits one for its first task even
+    when that task has no rows, and an add with ``numRecords: 0`` only
+    costs every reader a file open."""
     found: list[tuple[str, str, dict]] = []
     for root, _dirs, files in sorted(os.walk(out_dir)):
         rel_sub = os.path.relpath(root, out_dir)
@@ -1841,6 +1844,9 @@ def _collect_written_adds(
         counts = dict(_num_records(f) for f, _r, _p in found)
     adds: list[dict] = []
     for absf, rel, pv in found:
+        if counts[absf] == 0:
+            os.remove(absf)
+            continue
         adds.append({
             "path": urllib.parse.quote(rel, safe="/=%"),
             "partitionValues": pv,

@@ -69,6 +69,7 @@ import urllib.parse
 import uuid
 from typing import NamedTuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -629,11 +630,22 @@ _INJECT_JOIN_MIN_GROUPS = 33
 # per-group constant-injection scan, whose _part_lit cast handles any
 # primitive — slower plan growth, but never a crash on an exotic
 # external table.
-_INJECT_PHYS_DDL = {
-    "int": "int", "long": "bigint", "string": "string",
-    "date": "int", "timestamp": "bigint", "timestamptz": "bigint",
-    "boolean": "boolean", "float": "float", "double": "double",
+_INJECT_PHYS_ARROW = {
+    "int": pa.int32(), "long": pa.int64(), "string": pa.string(),
+    "date": pa.int32(), "timestamp": pa.int64(), "timestamptz": pa.int64(),
+    "boolean": pa.bool_(), "float": pa.float32(), "double": pa.float64(),
 }
+
+
+def _arrow_frame(spark: SparkSession, rows: list[tuple],
+                 schema: pa.Schema) -> DataFrame:
+    """A driver-built frame of metadata rows through one Arrow table: it
+    plans as a ``LocalTableScan``, where a list of Python rows plans as a
+    Python-RDD-backed ``ExistingRDD`` scan."""
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema))
 
 
 def _read_mapped_files(spark: SparkSession, files_parts: list[tuple],
@@ -652,7 +664,7 @@ def _read_mapped_files(spark: SparkSession, files_parts: list[tuple],
     broadcast join on ``_metadata`` file path that carries each file's
     partition values — same rows, flat plan."""
     inject_types_ok = all(
-        f["type"] in _INJECT_PHYS_DDL
+        f["type"] in _INJECT_PHYS_ARROW
         for f in fields if id_part.get(f["id"]) is not None
     )
     if (len(files_parts) >= _INJECT_JOIN_MIN_GROUPS and id_part
@@ -718,8 +730,7 @@ def _read_mapped_files_joined(
     # Avro-physical carriers (date -> int days, timestamp -> micros) and
     # convert to the logical type after the join, exactly like _part_lit.
     # The dispatcher only routes here when every inject type is in
-    # _INJECT_PHYS_DDL; anything else stays on the per-group scan.
-    phys_ddl = _INJECT_PHYS_DDL
+    # _INJECT_PHYS_ARROW; anything else stays on the per-group scan.
     def phys_val(v, t: str):
         # manifests carry ints already; tolerate an exotic writer's
         # stringly values the same way _part_lit's cast does
@@ -742,11 +753,11 @@ def _read_mapped_files_joined(
                      for f in inject)
         for fpath in fs:
             rows.append((os.path.abspath(fpath),) + vals)
-    inj_schema = ", ".join(
-        ["__inj_src string"]
-        + [f"`__inj_{f['id']}` {phys_ddl[f['type']]}" for f in inject]
+    inj_schema = pa.schema(
+        [("__inj_src", pa.string())]
+        + [(f"__inj_{f['id']}", _INJECT_PHYS_ARROW[f["type"]]) for f in inject]
     )
-    inj = spark.createDataFrame(rows, inj_schema)
+    inj = _arrow_frame(spark, rows, inj_schema)
     out = raw.join(F.broadcast(inj),
                    F.col("__ice_src") == F.col("__inj_src"), "left")
 
@@ -877,10 +888,10 @@ def _apply_deletes(spark: SparkSession, df: DataFrame,
     its data still wants compaction first — but an over-cap delete set
     now degrades to a shuffle instead of OOMing the broadcast."""
     # per-file (normalized path, partition tuple, data sequence number)
-    seq_rows = [(_norm_path(t[1]), t[5], t[8]) for t in entries]
-    seq_df = spark.createDataFrame(
-        seq_rows, "__ice_src string, __ice_part string, __ice_seq bigint"
-    )
+    seq_df = _arrow_frame(
+        spark, [(_norm_path(t[1]), t[5], t[8]) for t in entries],
+        pa.schema([("__ice_src", pa.string()), ("__ice_part", pa.string()),
+                   ("__ice_seq", pa.int64())]))
     df = df.join(F.broadcast(seq_df), "__ice_src", "left")
 
     def gated(ddf: DataFrame, n_rows: int) -> DataFrame:

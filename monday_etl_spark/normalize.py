@@ -35,6 +35,7 @@ dates, so this is unreachable in practice.
 
 from __future__ import annotations
 
+import math
 import re
 
 import pyarrow as pa
@@ -131,9 +132,17 @@ def responses_df(spark: SparkSession, responses: list[dict]) -> DataFrame:
     raises ``ArrowTypeError`` rather than being coerced, and an empty list
     gives an empty frame with the full nested schema. Independent of
     ``spark.sql.execution.arrow.pyspark.enabled``.
+
+    The frame is sized by bytes, not by cores: it is coalesced to
+    ``ceil(table.nbytes / spark.sql.files.maxPartitionBytes)`` partitions
+    (at least one), about the split a file scan of the same bytes would
+    get. A board of a few MB is one partition, so each table loaded from
+    it is written as one file per target rather than one per core.
     """
     table = pa.Table.from_pylist(responses, schema=_MONDAY_ARROW)
-    return spark.createDataFrame(table, schema=MONDAY_SCHEMA)
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    n_parts = max(1, math.ceil(table.nbytes / split))
+    return spark.createDataFrame(table, schema=MONDAY_SCHEMA).coalesce(n_parts)
 
 
 def board_df(spark: SparkSession, response: dict) -> DataFrame:

@@ -8,8 +8,11 @@ Stage mapping:
   4 GraphQL extracts (row loops) | MondayConnector fetch -> nested DF, serial
   transform (list[dict] loops)   | normalize.extract_* (one SQL text a field)
   load x5 (truncate + append)    | temporal.dual_write (idempotent), the five
-                                 | tables loaded concurrently
-  compare_with_previous_day      | temporal.compare_with_previous_day
+                                 | tables loaded concurrently, one file per
+                                 | table and target for a board's size
+  compare_with_previous_day      | temporal.compare_with_previous_day over
+                                 | the two newest day partitions, history
+                                 | read with the schema just written
   send_notification              | returned stats dict (transport-agnostic)
 
 The IR between stages is a lazy DataFrame (Catalyst logical plan) instead of
@@ -120,7 +123,8 @@ def run_daily_etl(
         stats["quality"] = metrics
 
     dod = compare_with_previous_day(
-        read_historical(spark, base_path, "project_subitems"),
+        read_historical(spark, base_path, "project_subitems",
+                        tables["project_subitems"].schema),
         "subitem_id",
         "revenue_amount",
     ).first()

@@ -202,8 +202,10 @@ def pages_to_df(spark: SparkSession, pages: list[dict]) -> DataFrame:
     and items alike, and Spark sees one scan, not N unions. The scan is an
     Arrow-built ``LocalRelation``, so each of the daily run's re-scans (two
     writes per table, two tables from the project board) decodes Arrow
-    instead of unpickling every nested page again. No pages give an empty
-    frame that still has the item columns.
+    instead of unpickling every nested page again. Its partitions follow
+    the pages' Arrow bytes (``maxPartitionBytes`` each), so a board of a
+    few MB is one partition and one written file per target. No pages
+    give an empty frame that still has the item columns.
     """
     return items_df(responses_df(spark, pages))
 

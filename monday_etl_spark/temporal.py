@@ -11,21 +11,30 @@ implementation of that lifecycle on Parquet:
   (logs show 184 = 2x92 project rows after two same-day runs; SURVEY §2.10).
 - ``compare_with_previous_day``: O-39 snapshot diff as a DataFrame function.
 - ``check_*``: the data-quality probes of advanced_monitoring.py as small
-  DataFrame builders; ``health_report`` collects them into a dict like the
-  reference's report layer (driver-side by design — the inputs are 1-row DFs).
+  DataFrame builders; ``health_report`` returns the same values in a dict
+  like the reference's report layer (driver-side by design — the results
+  are one row each), with completeness and duplicates in one aggregate.
 
-Scale: historical tables are partitioned by extraction_date, so a query
-that filters on a literal day prunes to that partition. The day-over-day
-compare does not: it aggregates every day of history, then joins the two
-latest days. The quality probes aggregate map-side before any exchange.
+Scale: historical tables are partitioned by extraction_date, and the days
+a table holds are its partition directories. ``spark.read.parquet`` lists
+them when the frame is built, so ``history_days`` reads them from that
+listing without a job. The day-over-day compare uses it to scan only the
+newest day and the day before (two partitions, one aggregate), and the
+health report answers freshness from it; neither cost grows with the
+number of days kept. The quality probes aggregate map-side before any
+exchange.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+import re
+import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .functions import money_sum
 from .io import write_historical, write_snapshot
@@ -38,36 +47,66 @@ def dual_write(df: DataFrame, base_path: str, table: str) -> None:
     write_historical(df, os.path.join(base_path, f"{table}_historical"))
 
 
-def read_historical(spark: SparkSession, base_path: str, table: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(base_path, f"{table}_historical"))
+def read_historical(spark: SparkSession, base_path: str, table: str,
+                    schema: StructType | None = None) -> DataFrame:
+    """The day-partitioned history of ``table``. With the ``schema`` the
+    loads wrote, the read skips the parquet footer-inference job."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(os.path.join(base_path, f"{table}_historical"))
+
+
+_DAY_DIR = re.compile(r"/extraction_date=([^/]+)/")
+
+
+def history_days(hist: DataFrame) -> list[dt.date]:
+    """The days a historical table holds, oldest first, read from the
+    ``extraction_date=`` directories ``spark.read.parquet`` listed for
+    ``hist`` (no job). ``hist`` must be the table as ``read_historical``
+    returns it: a file without such a directory, or rows that come from
+    no file, raise ``ValueError``. A history with no files has no days."""
+    files = hist.inputFiles()
+    days = set()
+    for f in files:
+        m = _DAY_DIR.search(f)
+        if m is None:
+            raise ValueError(
+                f"{f} is not under an extraction_date= directory: the "
+                "history must be read from its day-partitioned table")
+        value = urllib.parse.unquote(m.group(1))
+        if value != "__HIVE_DEFAULT_PARTITION__":
+            days.add(dt.date.fromisoformat(value))
+    if not files and not hist.isEmpty():
+        raise ValueError("history rows come from no file: the history must "
+                         "be read from its day-partitioned table")
+    return sorted(days)
 
 
 def compare_with_previous_day(hist: DataFrame, id_col: str, measure_col: str) -> DataFrame:
     """O-39: latest-day vs previous-day entity counts and measure totals
     (ref: compare_with_previous_day, monday_etl_automated.py:600-645).
 
-    Works on any historical table with an ``extraction_date`` column. The
-    daily pre-aggregate scans the whole history (the latest day is only
-    known after it), reducing it to one row per day before the tiny join.
+    ``hist`` is a historical table as ``read_historical`` returns it. The
+    newest day present (not the run date, so a backfilled older day does
+    not move it) comes from the partition listing; only that day's and
+    the day before's partitions are scanned, in one aggregate. A missing
+    previous day gives null yesterday fields; an empty history, no row.
     """
-    daily = hist.groupBy("extraction_date").agg(
-        F.countDistinct(id_col).alias("n_entities"),
-        money_sum(F.col(measure_col)).alias("total_measure"),
-    )
-    latest = daily.agg(F.max("extraction_date").alias("today"))
-    t = latest.join(daily, daily.extraction_date == latest.today).select(
-        F.col("extraction_date").alias("today"),
-        F.col("n_entities").alias("entities_today"),
-        F.col("total_measure").alias("measure_today"),
-    )
-    y = latest.join(
-        daily, daily.extraction_date == F.date_sub(latest.today, 1), "left"
+    days = history_days(hist)
+    today = days[-1] if days else None
+    yesterday = today - dt.timedelta(days=1) if days else None
+    has_yesterday = F.lit(yesterday in days)
+    day = F.col("extraction_date")
+    on_today, on_yesterday = day == F.lit(today), day == F.lit(yesterday)
+    scanned = [d for d in (yesterday, today) if d in days]
+    out = hist.filter(day.isin(*scanned)).agg(
+        F.lit(today).cast("date").alias("today"),
+        F.countDistinct(F.when(on_today, F.col(id_col))).alias("entities_today"),
+        F.when(has_yesterday, F.countDistinct(F.when(on_yesterday, F.col(id_col))))
+        .alias("entities_yesterday"),
+        money_sum(F.when(on_today, F.col(measure_col))).alias("measure_today"),
+        F.when(has_yesterday, money_sum(F.when(on_yesterday, F.col(measure_col))))
+        .alias("measure_yesterday"),
     ).select(
-        F.col("today").alias("t2"),
-        F.col("n_entities").alias("entities_yesterday"),
-        F.col("total_measure").alias("measure_yesterday"),
-    )
-    return t.join(y, t.today == y.t2).select(
         "today",
         "entities_today",
         "entities_yesterday",
@@ -78,6 +117,7 @@ def compare_with_previous_day(hist: DataFrame, id_col: str, measure_col: str) ->
             "measure_change"
         ),
     )
+    return out if days else out.limit(0)
 
 
 def latest_snapshot_view(hist: DataFrame, key: str,
@@ -163,14 +203,49 @@ def check_completeness(df: DataFrame, measure_col: str) -> DataFrame:
     )
 
 
+def _snapshot_probes(df: DataFrame, key: str, measure_col: str) -> DataFrame:
+    """``check_completeness`` and ``check_duplicates`` in one aggregate:
+    per-key counts and exact decimal sums first, then one row. Sums of
+    the per-key decimal sums equal the row sums, so every value is the
+    two probes' own."""
+    per_key = df.groupBy(key).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(F.col(measure_col) > 0, 1)).alias("n_pos"),
+        F.sum(F.col(measure_col).cast("decimal(18,2)")).alias("total"),
+    )
+    n = F.coalesce(F.sum("n"), F.lit(0))
+    with_measure = F.coalesce(F.sum("n_pos"), F.lit(0))
+    dup = F.col("n") > 1
+    return per_key.agg(
+        n.alias("n_rows"),
+        with_measure.alias("n_with_measure"),
+        F.round(F.sum("total").cast("double"), 2).alias("total_measure"),
+        F.when(n > 0, (with_measure.cast("double") / n) * 100).alias("coverage_pct"),
+        F.count(F.when(dup, 1)).alias("n_duplicate_keys"),
+        F.coalesce(F.sum(F.when(dup, F.col("n"))), F.lit(0)).alias("n_rows_in_duplicates"),
+    )
+
+
 def health_report(snapshot: DataFrame, hist: DataFrame, key: str,
                   measure_col: str, as_of) -> dict:
     """E-2 read path (advanced_monitoring.py:204-268): run the probes and
-    collect — the report layer is driver-side over 1-row results."""
+    collect — the report layer is driver-side over 1-row results.
+
+    ``hist`` is a historical table as ``read_historical`` returns it.
+    Freshness comes from its partition listing (no job); ``as_of`` is a
+    date, datetime or ISO string, of which the date part is read.
+    Completeness and duplicates share one aggregate over ``snapshot``."""
+    days = history_days(hist)
     dod = compare_with_previous_day(hist, key, measure_col).first()
+    probes = _snapshot_probes(snapshot, key, measure_col).first().asDict()
+    last = days[-1] if days else None
+    as_of_day = dt.date.fromisoformat(str(as_of)[:10])
     return {
-        "completeness": check_completeness(snapshot, measure_col).first().asDict(),
-        "duplicates": check_duplicates(snapshot, key).first().asDict(),
-        "freshness": check_freshness(hist, as_of).first().asDict(),
+        "completeness": {k: probes[k] for k in (
+            "n_rows", "n_with_measure", "total_measure", "coverage_pct")},
+        "duplicates": {k: probes[k] for k in (
+            "n_duplicate_keys", "n_rows_in_duplicates")},
+        "freshness": {"last_extraction_date": last,
+                      "days_stale": (as_of_day - last).days if days else None},
         "day_over_day": dod.asDict() if dod is not None else None,
     }

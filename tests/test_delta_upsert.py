@@ -213,3 +213,32 @@ def test_upsert_loses_the_race_to_a_commit_after_its_snapshot(
     assert delta_versions(table) == [0, 1]
     rows = sorted((r.id, r.v) for r in read_delta(spark, table).collect())
     assert rows == [(i, float(i)) for i in range(10)] + [(700, 7.0)]
+
+
+@pytest.mark.parametrize("op", ["upsert", "append"])
+def test_writes_commit_no_empty_files(spark, tmp_path, op):
+    """A source whose first partitions are empty: Spark's writer still
+    emits a file for task 0, and no add may commit it."""
+    path = _orders_table(spark, tmp_path)
+    src = spark.range(0, 400, 1, 4).filter("id >= 300").select(
+        F.col("id").alias("o_orderkey"),
+        (F.col("id") * -1.0).alias("o_totalprice"))
+    if op == "upsert":
+        version = upsert_delta(spark, src, path, ["o_orderkey"])
+        expected = ([(i, float(i % 97)) for i in range(2000) if not 300 <= i < 400]
+                    + [(i, -float(i)) for i in range(300, 400)])
+    else:
+        version = append_delta(spark, src, path)
+        expected = ([(i, float(i % 97)) for i in range(2000)]
+                    + [(i, -float(i)) for i in range(300, 400)])
+    adds = [a["add"] for a in _commit_actions(path, version) if "add" in a]
+    records = [json.loads(a["stats"])["numRecords"] for a in adds]
+    assert adds and 0 not in records, records
+    assert sum(records) >= 100
+    live = {a["path"] for a in adds}
+    data_dir = os.path.join(path, next(iter(live)).split("/")[0])
+    assert {f"{os.path.basename(data_dir)}/{f}" for f in os.listdir(data_dir)
+            if f.endswith(".parquet")} == live
+    rows = sorted((r.o_orderkey, r.o_totalprice)
+                  for r in read_delta(spark, path).collect())
+    assert rows == sorted(expected)

@@ -233,8 +233,8 @@ def test_join_injection_exotic_identity_partition_type(spark, tmp_path,
     # a carrier type OUTSIDE the map keeps the per-group constant form:
     # same rows, no KeyError
     monkeypatch.setattr(
-        ii, "_INJECT_PHYS_DDL",
-        {k: t for k, t in ii._INJECT_PHYS_DDL.items() if k != "double"})
+        ii, "_INJECT_PHYS_ARROW",
+        {k: t for k, t in ii._INJECT_PHYS_ARROW.items() if k != "double"})
     assert _rows(read_iceberg_table(spark, path)) == sorted(want)
 
 
@@ -814,6 +814,27 @@ def _plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain()
     return buf.getvalue()
+
+
+def test_live_equality_deletes_plan_a_local_scan(spark, tmp_path):
+    """The per-file (source, partition, sequence) frame a read with live
+    equality deletes joins against is built from Arrow: it plans as a
+    ``LocalTableScan``, not a Python-RDD ``ExistingRDD`` scan."""
+    from monday_etl_spark.iceberg_import import upsert_iceberg
+
+    path = str(tmp_path / "ups")
+    df = spark.createDataFrame(
+        [(i, float(i)) for i in range(50)], "id bigint, v double")
+    write_versioned(df, path, key="id", n_buckets=4, stats_cols=["id"])
+    export_iceberg(path)
+    incoming = spark.createDataFrame(
+        [(i, 1000.0 + i) for i in range(40, 60)], "id bigint, v double")
+    upsert_iceberg(spark, incoming, path, key="id")
+
+    got = read_iceberg_table(spark, path)
+    plan = _plan_of(got)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert _rows(got) == _rows(df.filter("id < 40").unionByName(incoming))
 
 
 def test_delete_join_strategy_gated_on_manifest_counts(

@@ -135,3 +135,60 @@ def test_loads_inherit_the_callers_job_group_and_tags(spark, tmp_path):
     store = sc._jsc.sc().statusStore()
     for jid in jobs[:10]:
         assert tag in store.job(jid).jobTags().mkString(","), jid
+
+
+class PagedBoardTransport:
+    """Serves each fixture board cloned to ``n_items`` items, ``per_page``
+    a page, following the ``page{i}`` cursor the connector echoes back."""
+
+    def __init__(self, n_items: int = 1000, per_page: int = 100):
+        import copy
+        import re
+
+        self.cursor = re.compile(r'cursor: "page(\d+)"')
+        self.pages = {}
+        for board_id, resp in MultiBoardTransport().routes.items():
+            template = resp["data"]["boards"][0]["items_page"]["items"]
+            items = []
+            for i in range(n_items):
+                item = copy.deepcopy(template[i % len(template)])
+                item["id"] = f"{item['id']}{i:04d}"
+                for sub in item.get("subitems") or []:
+                    sub["id"] = f"{sub['id']}{i:04d}"
+                items.append(item)
+            n_pages = -(-n_items // per_page)
+            self.pages[board_id] = [
+                {"data": {"boards": [{"items_page": {
+                    "cursor": f"page{p + 1}" if p + 1 < n_pages else None,
+                    "items": items[p * per_page:(p + 1) * per_page],
+                }}]}}
+                for p in range(n_pages)
+            ]
+
+    def __call__(self, query: str) -> dict:
+        m = self.cursor.search(query)
+        for board_id, pages in self.pages.items():
+            if board_id in query:
+                return pages[int(m.group(1)) if m else 0]
+        raise AssertionError(f"unexpected query: {query[:100]}")
+
+
+def test_multi_page_board_writes_one_file_per_target(spark, tmp_path):
+    """A 1000-item board fetched as 10 pages is a few hundred KB of Arrow,
+    one partition: ungated and gated, every snapshot and every historical
+    day partition holds exactly one parquet file."""
+    import glob
+    import os
+
+    transport = PagedBoardTransport()
+    base = str(tmp_path)
+    for gate in (None, QualityGate(min_rows=1)):
+        stats = run_daily_etl(spark, MondayConnector(transport), base,
+                              "2025-06-25", FX.RUN_TS, gate=gate)
+        assert stats["tables"]["projects"] == 1000
+        assert stats["tables"]["travel_costs"] == 1000
+        for name in stats["tables"]:
+            for target in (os.path.join(base, name),
+                           os.path.join(base, f"{name}_historical",
+                                        "extraction_date=2025-06-25")):
+                assert len(glob.glob(os.path.join(target, "*.parquet"))) == 1, target
