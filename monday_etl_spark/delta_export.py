@@ -62,7 +62,12 @@ import os
 import urllib.parse
 import uuid
 
-from .tableformat import _commit_dir_of, _read_manifest, current_version
+from .tableformat import (
+    _commit_dir_of,
+    _publish,
+    _read_manifest,
+    current_version,
+)
 
 _LOG_DIR = "_delta_log"
 _MAP_ID = "delta.columnMapping.id"
@@ -158,9 +163,12 @@ def _naming_plan(man: dict, rel_files: list[str]) -> dict[str, int] | None:
 def export_delta_log(path: str, version: int | None = None) -> str:
     """Write ``<path>/_delta_log/00000000000000000000.json`` describing the
     given tableformat ``version`` (default: latest) and return the log file
-    path. Idempotent for the same snapshot; raises if a DIFFERENT snapshot
-    was already exported there (Delta logs are append-only — re-pointing
-    version 0 would corrupt any reader's cached state)."""
+    path. Published through ``tableformat._publish``: the same snapshot
+    exported again is an idempotent no-op (byte-identical log), a DIFFERENT
+    snapshot already exported there raises ``ConcurrentCommitError`` (a
+    ``FileExistsError``) — Delta logs are append-only, and re-pointing
+    version 0 would corrupt any reader's cached state. Remove
+    ``_delta_log/`` explicitly to re-export."""
     version = version if version is not None else current_version(path)
     if version is None:
         raise FileNotFoundError(f"no committed version at {path}")
@@ -276,18 +284,7 @@ def export_delta_log(path: str, version: int | None = None) -> str:
     log_dir = os.path.join(path, _LOG_DIR)
     os.makedirs(log_dir, exist_ok=True)
     log_file = os.path.join(log_dir, f"{0:020d}.json")
-    if os.path.exists(log_file):
-        with open(log_file) as fh:
-            if fh.read() == payload:
-                return log_file  # same snapshot: idempotent no-op
-        raise FileExistsError(
-            f"{log_file} already exports a different snapshot; Delta logs "
-            "are append-only — remove _delta_log/ explicitly to re-export"
-        )
-    tmp = f"{log_file}.{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write(payload)
-    os.replace(tmp, log_file)
+    _publish(log_file, payload)
     return log_file
 
 

@@ -34,11 +34,15 @@ Appending = one parquet write + one put-if-absent commit: new data files
 land under the table root (partitioned tables route rows into Hive-style
 ``key=value`` directories, recorded as ``partitionValues`` and kept OUT
 of the data files per the spec), then ``<next_version:020d>.json`` (add
-actions + commitInfo) publishes through the same ``LogStore`` seam
-tableformat commits use — a lost race surfaces as ``FileExistsError`` (or, with
-``retries``, re-derives against the new snapshot and re-publishes the
-same already-written files at the next version), never a clobbered
-commit. The appended table remains readable by any Delta engine.
+actions + commitInfo) publishes through ``tableformat._publish``, the
+one commit step house and Iceberg commits use too. Every mutator here
+(append, upsert, DV delete, compact, restore) ends in ``_commit_delta``:
+a lost race surfaces as ``ConcurrentCommitError`` (a ``FileExistsError``;
+``append_delta(retries=N)`` re-derives against the new snapshot and
+re-publishes the same already-written files at the next version), a
+put whose acknowledgement was lost is recognised as this commit, and
+nothing is ever clobbered. The appended table remains readable by any
+Delta engine.
 
 Exactly-once appends: the spec's *Transaction Identifiers* (``txn``
 actions) ride the same replay — ``append_delta(app_id=..., txn_version=n)``
@@ -80,6 +84,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from .tableformat import ConcurrentCommitError, _publish
 
 _LOG_DIR = "_delta_log"
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
@@ -1497,8 +1503,6 @@ def delete_delta_where(spark: SparkSession, path: str, column: str,
     sides — silently upgrading the protocol would strand every other
     reader, so a plain table refuses loudly (rewrite-based deletes or
     the protocol upgrade are the native engine's job)."""
-    from . import tableformat as _tf
-
     path = os.path.abspath(path)  # match read_delta's provenance form
     snap = _snapshot_state(spark, path, None)
     latest, meta = snap.version, snap.meta
@@ -1612,34 +1616,12 @@ def delete_delta_where(spark: SparkSession, path: str, column: str,
     # commit without reconstructing from the DV diff (which add/remove
     # replay cannot express). Written distributed, Hive-partitioned
     # like the data when the table is partitioned.
-    cdc_actions: list[dict] = []
+    actions: list[dict] = []
     if conf.get("delta.enableChangeDataFeed") == "true":
-        part_cols = meta.get("partitionColumns") or []
-        rel_dir = f"_change_data/cdc-{latest + 1}-{uuid.uuid4().hex[:8]}"
-        out_dir = os.path.join(path, rel_dir)
         pre = (df.filter(F.col(f"`{column}`").between(lo, hi))
                .select(*[f.name for f in schema.fields])
                .withColumn("_change_type", F.lit("delete")))
-        w = pre.write
-        if part_cols:
-            w = w.partitionBy(*part_cols)
-        w.parquet(out_dir)
-        for a in _collect_written_adds(out_dir, rel_dir, part_cols,
-                                       spark=spark):
-            cdc_actions.append({"cdc": {
-                "path": a["path"],
-                "partitionValues": a["partitionValues"],
-                "size": a["size"], "dataChange": False}})
-
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": int(_time.time() * 1000),
-            "operation": "DELETE",
-            "operationParameters": {
-                "predicate": f"{column} BETWEEN {lo!r} AND {hi!r}"},
-            "engineInfo": "monday-etl-spark delta bridge",
-        }
-    }] + cdc_actions
+        actions += _write_change_data(spark, path, latest + 1, pre, meta)
     for r in sorted(descriptors, key=lambda r: r["src"]):
         rel, a = by_norm[r["src"]]
         actions.append({"remove": {"path": rel, "dataChange": True}})
@@ -1654,10 +1636,9 @@ def delete_delta_where(spark: SparkSession, path: str, column: str,
         if isinstance(newadd.get("stats"), dict):
             newadd["stats"] = json.dumps(newadd["stats"])
         actions.append({"add": newadd})
-    payload = "\n".join(json.dumps(a) for a in actions) + "\n"
-    target = os.path.join(_log_dir(path), f"{latest + 1:020d}.json")
-    _tf._LOG_STORE.put_if_absent(target, payload)
-    return latest + 1
+    return _commit_delta(
+        path, latest + 1, "DELETE",
+        {"predicate": f"{column} BETWEEN {lo!r} AND {hi!r}"}, actions)
 
 
 def upsert_delta(spark: SparkSession, df: DataFrame, path: str,
@@ -1673,7 +1654,7 @@ def upsert_delta(spark: SparkSession, df: DataFrame, path: str,
     no second write; untouched files stay referenced, so cost tracks the
     matched-file set, not the table. Both passes scan the snapshot the
     commit builds on, so a commit landing in between makes the put lose
-    its race (``FileExistsError``). Change Data Feed tables also get
+    its race (``ConcurrentCommitError``). Change Data Feed tables also get
     ``_change_data`` rows (``update_preimage``/``update_postimage`` for
     matched keys, ``insert`` for the rest) + cdc actions, so
     :func:`delta_cdf.read_delta_changes` serves the commit exactly.
@@ -1683,8 +1664,6 @@ def upsert_delta(spark: SparkSession, df: DataFrame, path: str,
     ``app_id``/``txn_version`` give exactly-once replays via the spec's
     transaction identifiers. Reference scope: keyed MERGE refreshes of
     warehouse tables (monday_etl_automated.py:571-600)."""
-    from . import tableformat as _tf
-
     if (app_id is None) != (txn_version is None):
         raise ValueError("app_id and txn_version must be given together")
     path = os.path.abspath(path)
@@ -1751,7 +1730,7 @@ def upsert_delta(spark: SparkSession, df: DataFrame, path: str,
     adds = _collect_written_adds(
         os.path.join(path, rel_dir), rel_dir, part_cols, spark=spark)
 
-    cdc_actions: list[dict] = []
+    actions: list[dict] = []
     if conf.get("delta.enableChangeDataFeed") == "true":
         mkeys = matched.select(*key_cols).distinct()
         pre = (matched.select(*cols)
@@ -1760,40 +1739,19 @@ def upsert_delta(spark: SparkSession, df: DataFrame, path: str,
                 .withColumn("_change_type", F.lit("update_postimage")))
         ins = (src.join(F.broadcast(mkeys), key_cols, "left_anti")
                .withColumn("_change_type", F.lit("insert")))
-        cdc_df = pre.unionByName(post).unionByName(ins)
-        rel_dir = f"_change_data/cdc-{latest + 1}-{uuid.uuid4().hex[:8]}"
-        w = cdc_df.write
-        if part_cols:
-            w = w.partitionBy(*part_cols)
-        w.parquet(os.path.join(path, rel_dir))
-        for a in _collect_written_adds(
-                os.path.join(path, rel_dir), rel_dir, part_cols,
-                spark=spark):
-            cdc_actions.append({"cdc": {
-                "path": a["path"],
-                "partitionValues": a["partitionValues"],
-                "size": a["size"], "dataChange": False}})
+        actions += _write_change_data(
+            spark, path, latest + 1,
+            pre.unionByName(post).unionByName(ins), meta)
 
     now_ms = int(_time.time() * 1000)
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "MERGE",
-            "operationParameters": {"matchedPredicates": json.dumps(
-                [{"actionType": "update"}])},
-            "engineInfo": "monday-etl-spark delta bridge",
-        }
-    }] + cdc_actions
     for rel in sorted(rel_of[a] for a in affected_abs):
         actions.append({"remove": {"path": rel, "dataChange": True,
                                    "deletionTimestamp": now_ms}})
     actions += [{"add": a} for a in adds]
-    if app_id is not None:
-        actions.append({"txn": {"appId": app_id, "version": txn_version}})
-    payload = "\n".join(json.dumps(a) for a in actions) + "\n"
-    target = os.path.join(_log_dir(path), f"{latest + 1:020d}.json")
-    _tf._LOG_STORE.put_if_absent(target, payload)
-    return latest + 1
+    return _commit_delta(
+        path, latest + 1, "MERGE",
+        {"matchedPredicates": json.dumps([{"actionType": "update"}])},
+        actions, now_ms, app_id, txn_version)
 
 
 def _num_records(absf: str) -> tuple[str, int]:
@@ -1858,6 +1816,49 @@ def _collect_written_adds(
     return adds
 
 
+def _write_change_data(spark: SparkSession, path: str, version: int,
+                       cdc_df: DataFrame, meta: dict) -> list[dict]:
+    """Change Data Feed: write ``cdc_df`` (the table's columns plus the
+    spec's ``_change_type``) as commit ``version``'s ``_change_data``
+    parquet, Hive-partitioned like the data, and return its ``cdc``
+    actions — what lets ``read_delta_changes`` serve a commit whose
+    row-level change add/remove replay cannot express."""
+    part_cols = meta.get("partitionColumns") or []
+    rel_dir = f"_change_data/cdc-{version}-{uuid.uuid4().hex[:8]}"
+    w = cdc_df.write
+    if part_cols:
+        w = w.partitionBy(*part_cols)
+    w.parquet(os.path.join(path, rel_dir))
+    return [{"cdc": {"path": a["path"], "partitionValues": a["partitionValues"],
+                     "size": a["size"], "dataChange": False}}
+            for a in _collect_written_adds(os.path.join(path, rel_dir),
+                                           rel_dir, part_cols, spark=spark)]
+
+
+def _commit_delta(path: str, version: int, operation: str, params: dict,
+                  actions: list[dict], now_ms: int | None = None,
+                  app_id: str | None = None,
+                  txn_version: int | None = None) -> int:
+    """The shared tail of every Delta mutator: ``commitInfo``, then
+    ``actions``, then the optional ``txn`` (appId, version), published as
+    commit ``version`` through ``tableformat._publish`` — a lost race
+    raises ``ConcurrentCommitError``, a lost acknowledgement of our own
+    put is a success. Returns ``version``."""
+    if now_ms is None:
+        now_ms = int(_time.time() * 1000)
+    commit = [{"commitInfo": {
+        "timestamp": now_ms,
+        "operation": operation,
+        "operationParameters": params,
+        "engineInfo": "monday-etl-spark delta bridge",
+    }}] + actions
+    if app_id is not None:
+        commit.append({"txn": {"appId": app_id, "version": txn_version}})
+    _publish(os.path.join(_log_dir(path), f"{version:020d}.json"),
+             "\n".join(json.dumps(a) for a in commit) + "\n")
+    return version
+
+
 def append_delta(
     spark: SparkSession,
     df: DataFrame,
@@ -1870,16 +1871,16 @@ def append_delta(
     version. Write-then-publish: parquet files land under a
     writer-unique directory first, and the commit JSON publishes through
     the LogStore put-if-absent seam — two racing appenders cannot clobber
-    each other. A lost race raises ``FileExistsError``; with ``retries``
-    it re-replays the log and re-publishes the SAME already-written files
-    at the next version (the orphaned-loser model is Delta's own).
+    each other. A lost race raises ``ConcurrentCommitError`` (a
+    ``FileExistsError``); with ``retries`` it re-replays the log and
+    re-publishes the SAME already-written files at the next version (the
+    orphaned-loser model is Delta's own). A put that landed but whose
+    acknowledgement was lost counts as committed, never as a loss.
 
     ``app_id``/``txn_version`` make the append idempotent via the spec's
     transaction identifiers: when the table already holds a ``txn`` with
     ``version >= txn_version`` for this appId, the append is a replayed
     batch and is SKIPPED (returns the current version, writes nothing)."""
-    from . import tableformat as _tf
-
     if (app_id is None) != (txn_version is None):
         raise ValueError("app_id and txn_version must be given together")
 
@@ -1930,24 +1931,13 @@ def append_delta(
         {"add": a} for a in _collect_written_adds(out_dir, rel_dir,
                                                    part_cols, spark=spark)
     ]
-    commit = [{
-        "commitInfo": {
-            "timestamp": int(_time.time() * 1000),
-            "operation": "WRITE",
-            "operationParameters": {"mode": "Append"},
-            "engineInfo": "monday-etl-spark delta bridge",
-        }
-    }] + adds
-    if app_id is not None:
-        commit.append({"txn": {"appId": app_id, "version": txn_version}})
-    payload = "\n".join(json.dumps(a) for a in commit) + "\n"
-
+    now_ms = int(_time.time() * 1000)
     for attempt in range(retries + 1):
-        target = os.path.join(_log_dir(path), f"{latest + 1:020d}.json")
         try:
-            _tf._LOG_STORE.put_if_absent(target, payload)
-            return latest + 1
-        except FileExistsError:
+            return _commit_delta(path, latest + 1, "WRITE",
+                                 {"mode": "Append"}, adds, now_ms,
+                                 app_id, txn_version)
+        except ConcurrentCommitError:
             if attempt == retries:
                 raise
             # a concurrent writer won this version: re-derive against the
@@ -1974,9 +1964,6 @@ def compact_delta(spark: SparkSession, path: str) -> int:
     writing physical names + field ids into footers, which this writer
     does not do); append-only tables are fine — the spec's appendOnly
     forbids DATA-changing removes, and a compaction changes none."""
-    from . import tableformat as _tf
-    from .tableformat import ConcurrentCommitError
-
     path = os.path.abspath(path)
     snap = _snapshot_state(spark, path, None)
     latest, meta = snap.version, snap.meta
@@ -2020,24 +2007,8 @@ def compact_delta(spark: SparkSession, path: str) -> int:
                                    spark=spark):
         a["dataChange"] = False
         adds.append({"add": a})
-    commit = [{
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "OPTIMIZE",
-            "operationParameters": {"predicate": "[]"},
-            "engineInfo": "monday-etl-spark delta bridge",
-        }
-    }] + removes + adds
-    target = os.path.join(_log_dir(path), f"{latest + 1:020d}.json")
-    try:
-        _tf._LOG_STORE.put_if_absent(
-            target, "\n".join(json.dumps(x) for x in commit) + "\n")
-    except FileExistsError:
-        raise ConcurrentCommitError(
-            f"{path}: version {latest + 1} was committed by another "
-            "writer during the compaction rewrite; re-run to retry"
-        ) from None
-    return latest + 1
+    return _commit_delta(path, latest + 1, "OPTIMIZE", {"predicate": "[]"},
+                         removes + adds, now_ms)
 
 
 def vacuum_delta(spark: SparkSession, path: str, retain_last: int = 2,
@@ -2119,9 +2090,6 @@ def restore_delta(spark: SparkSession, path: str, version: int) -> int:
     restore is itself a commit, so a second RESTORE can undo it. Data
     files must still exist (a vacuum that swept them makes the target
     unrestorable; the missing paths are named in the error)."""
-    from . import tableformat as _tf
-    from .tableformat import ConcurrentCommitError
-
     path = os.path.abspath(path)
     snap_now = _snapshot_state(spark, path, None)
     latest = snap_now.version
@@ -2178,9 +2146,8 @@ def restore_delta(spark: SparkSession, path: str, version: int) -> int:
     # this op. CDF tables get exact pre-computed change rows instead
     # (delta-spark's RESTORE does the same): multiset except in both
     # directions, written as _change_data + cdc actions.
-    conf_now = snap_now.meta.get("configuration") or {}
-    cdc_actions: list[dict] = []
-    if conf_now.get("delta.enableChangeDataFeed") == "true":
+    actions: list[dict] = []
+    if conf.get("delta.enableChangeDataFeed") == "true":
         schema = StructType.fromJson(
             json.loads(snap_now.meta["schemaString"]))
         cols = [f.name for f in schema.fields]
@@ -2194,30 +2161,10 @@ def restore_delta(spark: SparkSession, path: str, version: int) -> int:
                 .withColumn("_change_type", F.lit("insert")))
         )
         if cdc_df.take(1):
-            part_cols = snap_now.meta.get("partitionColumns") or []
-            rel_dir = (f"_change_data/cdc-{latest + 1}-"
-                       f"{uuid.uuid4().hex[:8]}")
-            w = cdc_df.write
-            if part_cols:
-                w = w.partitionBy(*part_cols)
-            w.parquet(os.path.join(path, rel_dir))
-            for a in _collect_written_adds(
-                    os.path.join(path, rel_dir), rel_dir, part_cols,
-                    spark=spark):
-                cdc_actions.append({"cdc": {
-                    "path": a["path"],
-                    "partitionValues": a["partitionValues"],
-                    "size": a["size"], "dataChange": False}})
+            actions += _write_change_data(spark, path, latest + 1, cdc_df,
+                                          snap_now.meta)
 
     now_ms = int(_time.time() * 1000)
-    actions: list[dict] = [{
-        "commitInfo": {
-            "timestamp": now_ms,
-            "operation": "RESTORE",
-            "operationParameters": {"version": str(version)},
-            "engineInfo": "monday-etl-spark delta bridge",
-        }
-    }] + cdc_actions
     for rel in sorted(set(now_adds) - set(tgt_adds)):
         actions.append({"remove": {"path": rel, "dataChange": True,
                                    "deletionTimestamp": now_ms}})
@@ -2225,13 +2172,5 @@ def restore_delta(spark: SparkSession, path: str, version: int) -> int:
         a = tgt_adds[rel]
         if now_adds.get(rel) != a:  # absent at head, or DV differs
             actions.append({"add": {**a, "dataChange": True}})
-    target = os.path.join(_log_dir(path), f"{latest + 1:020d}.json")
-    try:
-        _tf._LOG_STORE.put_if_absent(
-            target, "\n".join(json.dumps(x) for x in actions) + "\n")
-    except FileExistsError:
-        raise ConcurrentCommitError(
-            f"{path}: version {latest + 1} was committed by another "
-            "writer during the restore; re-read and retry"
-        ) from None
-    return latest + 1
+    return _commit_delta(path, latest + 1, "RESTORE",
+                         {"version": str(version)}, actions, now_ms)

@@ -32,7 +32,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import _to_double, _topk_merge, cosine_hoisted, norm
+from .similarity import _norm_names, _to_double, _topk_merge, cosine_hoisted, norm
 
 #: fixed-point scale for the quantized training/assignment space.
 SCALE = 1_000_000
@@ -177,20 +177,20 @@ def topk_against_cells(c: DataFrame, queries: DataFrame,
         ).alias("pc"),
     ).select("query_id", "qv", F.col("pc.cell").alias("cell"), F.col("pc.d").alias("d"))
     wq = Window.partitionBy("query_id").orderBy(F.asc("d"), F.asc("cell"))
+    qn, cn = _norm_names(c.columns + ["query_id", "qv", "cell"])
     probe = (
         probe.withColumn("cr", F.row_number().over(wq))
         .filter(F.col("cr") <= nprobe)
         .select("query_id", "qv", "cell")
-        .withColumn("__qn", norm(F.col("qv")))
+        .withColumn(qn, norm(F.col("qv")))
     )
 
     # per-ROW norms below the join: one fold per scored pair, not three
-    scored = c.withColumn("__cn", norm(F.col("cv"))).join(
+    scored = c.withColumn(cn, norm(F.col("cv"))).join(
         F.broadcast(probe),
         (c.cell == probe.cell) & (F.col("neighbor_id") != F.col("query_id")),
     ).select("query_id", "neighbor_id",
-             cosine_hoisted(F.col("qv"), F.col("cv"),
-                            F.col("__qn"), F.col("__cn")).alias("sim"))
+             cosine_hoisted(F.col("qv"), F.col("cv"), F.col(qn), F.col(cn)).alias("sim"))
     return _topk_merge(scored, k)
 
 
@@ -224,17 +224,17 @@ def scored_cells(c: DataFrame, queries: DataFrame,
         ).alias("pc"),
     ).select("query_id", "qv", F.col("pc.cell").alias("cell"), F.col("pc.d").alias("d"))
     wq = Window.partitionBy("query_id").orderBy(F.asc("d"), F.asc("cell"))
+    qn, cn = _norm_names(c.columns + ["query_id", "qv", "cell", "cell_rank"])
     probe = probe.withColumn("cell_rank", F.row_number().over(wq)).select(
         "query_id", "qv", "cell", "cell_rank"
-    ).withColumn("__qn", norm(F.col("qv")))
+    ).withColumn(qn, norm(F.col("qv")))
     # per-ROW norms below the join: one fold per scored pair, not three
-    return c.withColumn("__cn", norm(F.col("cv"))).join(
+    return c.withColumn(cn, norm(F.col("cv"))).join(
         F.broadcast(probe),
         (c.cell == probe.cell) & (F.col("neighbor_id") != F.col("query_id")),
     ).select(
         "query_id",
         "neighbor_id",
         "cell_rank",
-        cosine_hoisted(F.col("qv"), F.col("cv"),
-                       F.col("__qn"), F.col("__cn")).alias("sim"),
+        cosine_hoisted(F.col("qv"), F.col("cv"), F.col(qn), F.col(cn)).alias("sim"),
     )

@@ -35,6 +35,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from .dsir import _fresh_name
+
 
 def _to_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -64,6 +66,13 @@ def cosine_hoisted(a: Column, b: Column, na: Column, nb: Column) -> Column:
     expression is the same ``Divide(dot, Multiply(na, nb))`` tree over
     identically-computed norm values — bit-identical results."""
     return dot(a, b) / (na * nb)
+
+
+def _norm_names(cols: list[str]) -> tuple[str, str]:
+    """Names for the hoisted query and candidate norm columns that are
+    absent from ``cols``: a caller frame that already carries a ``__qn``
+    or ``__cn`` column must not make the scorer's reference ambiguous."""
+    return _fresh_name(cols, "__qn"), _fresh_name(cols, "__cn")
 
 
 def _topk_merge(scored: DataFrame, k: int, fanout: int = 32) -> DataFrame:
@@ -111,17 +120,16 @@ def brute_force_topk(
     """Exact top-k neighbors per query (cosine), excluding self-matches.
     Returns (query_id, neighbor_id, rank, cosine_sim)."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), _to_double(F.col(vec_col)).alias("qv")
-    ).withColumn("__qn", norm(F.col("qv")))
+        F.col(id_col).alias("query_id"), _to_double(F.col(vec_col)).alias("qv"))
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _to_double(F.col(vec_col)).alias("cv")
-    ).withColumn("__cn", norm(F.col("cv")))
+        F.col(id_col).alias("neighbor_id"), _to_double(F.col(vec_col)).alias("cv"))
+    qn, cn = _norm_names(q.columns + c.columns)
+    q, c = q.withColumn(qn, norm(F.col("qv"))), c.withColumn(cn, norm(F.col("cv")))
     # queries are few: broadcast them so the corpus never shuffles
     scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
         "query_id",
         "neighbor_id",
-        cosine_hoisted(F.col("qv"), F.col("cv"),
-                       F.col("__qn"), F.col("__cn")).alias("sim"),
+        cosine_hoisted(F.col("qv"), F.col("cv"), F.col(qn), F.col(cn)).alias("sim"),
     )
     return _topk_merge(scored, k)
 
@@ -167,18 +175,17 @@ def lsh_bucket_topk(
     brute-force result with tunable recall."""
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _to_double(F.col(vec_col)).alias("cv")
-    ).withColumn("bucket", bucket_bits(F.col("cv"), dim, bits)) \
-        .withColumn("__cn", norm(F.col("cv")))
+    ).withColumn("bucket", bucket_bits(F.col("cv"), dim, bits))
     q = queries.select(
         F.col(id_col).alias("query_id"), _to_double(F.col(vec_col)).alias("qv")
-    ).withColumn("bucket", bucket_bits(F.col("qv"), dim, bits)) \
-        .withColumn("__qn", norm(F.col("qv")))
+    ).withColumn("bucket", bucket_bits(F.col("qv"), dim, bits))
+    qn, cn = _norm_names(q.columns + c.columns)
+    q, c = q.withColumn(qn, norm(F.col("qv"))), c.withColumn(cn, norm(F.col("cv")))
 
     scored = c.join(
         F.broadcast(q), (c.bucket == q.bucket) & (F.col("neighbor_id") != F.col("query_id"))
     ).select("query_id", "neighbor_id",
-             cosine_hoisted(F.col("qv"), F.col("cv"),
-                            F.col("__qn"), F.col("__cn")).alias("sim"))
+             cosine_hoisted(F.col("qv"), F.col("cv"), F.col(qn), F.col(cn)).alias("sim"))
     return _topk_merge(scored, k)
 
 

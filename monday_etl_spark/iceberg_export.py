@@ -49,7 +49,12 @@ import urllib.parse
 import uuid
 
 from .avro_ocf import write_ocf
-from .tableformat import _commit_dir_of, _read_manifest, current_version
+from .tableformat import (
+    _commit_dir_of,
+    _publish,
+    _read_manifest,
+    current_version,
+)
 
 _META_DIR = "metadata"
 
@@ -319,8 +324,11 @@ _MANIFEST_FILE = {
 def export_iceberg(path: str, version: int | None = None) -> str:
     """Write Iceberg v2 metadata describing tableformat ``version``
     (default latest) beside the table's data files; returns the
-    ``metadata.json`` path. Idempotent for the same snapshot; raises if a
-    DIFFERENT snapshot was already exported there."""
+    ``metadata.json`` path. Published through ``tableformat._publish``:
+    the same snapshot exported again is an idempotent no-op
+    (byte-identical metadata), a DIFFERENT snapshot already exported there
+    raises ``ConcurrentCommitError`` (a ``FileExistsError``). Remove
+    ``metadata/`` explicitly to re-export."""
     import pyarrow.parquet as pq
 
     version = version if version is not None else current_version(path)
@@ -480,35 +488,35 @@ def export_iceberg(path: str, version: int | None = None) -> str:
                           "timestamp-ms": committed_ms}],
         "metadata-log": [],
     }
-    payload = json.dumps(metadata, indent=2)
-    meta_file = os.path.join(meta_dir, "v1.metadata.json")
-    if os.path.exists(meta_file):
-        with open(meta_file) as fh:
-            if fh.read() == payload:
-                return meta_file  # same snapshot: idempotent no-op
-        raise FileExistsError(
-            f"{meta_file} already exports a different snapshot; remove "
-            f"{_META_DIR}/ explicitly to re-export"
-        )
-    tmp = f"{meta_file}.{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write(payload)
-    os.replace(tmp, meta_file)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
-    return meta_file
+    _publish_version(path, 1, metadata)
+    return os.path.join(meta_dir, "v1.metadata.json")
+
+
+def _publish_version(path: str, version: int, meta: dict) -> int:
+    """Publish ``meta`` as ``v{version}.metadata.json`` through
+    ``tableformat._publish`` (one winner per version; a lost race raises
+    ``ConcurrentCommitError``, a lost acknowledgement of our own put is a
+    success), then advance ``version-hint.text``, best-effort: readers
+    take the newest listed version, so the hint is only ever a lower
+    bound. The publish step of every Iceberg metadata version the bridges
+    write, the export's included."""
+    meta_dir = os.path.join(path, _META_DIR)
+    _publish(os.path.join(meta_dir, f"v{version}.metadata.json"),
+             json.dumps(meta, indent=2),
+             hint=(os.path.join(meta_dir, "version-hint.text"), str(version)))
+    return version
 
 
 # ----------------------------------------------------------------- reading
 
 
 def read_iceberg_meta(path: str) -> dict:
-    """Resolve the current metadata.json via version-hint.text."""
-    meta_dir = os.path.join(path, _META_DIR)
-    with open(os.path.join(meta_dir, "version-hint.text")) as fh:
-        v = int(fh.read().strip())
-    with open(os.path.join(meta_dir, f"v{v}.metadata.json")) as fh:
-        return json.load(fh)
+    """The current metadata.json, resolved like every Iceberg read here
+    (``iceberg_import.read_metadata``: the newest listed version)."""
+    # lazy: iceberg_import imports this module
+    from .iceberg_import import read_metadata
+
+    return read_metadata(path)
 
 
 def _from_uri(p: str) -> str:

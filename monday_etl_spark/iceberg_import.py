@@ -5,10 +5,10 @@ bridge; this is the inbound half, implemented — like ``delta_import`` —
 directly from the PUBLIC table spec (iceberg.apache.org/spec/), no
 Iceberg library required:
 
-- **discovery**: ``metadata/version-hint.text`` (HadoopCatalog) when
-  present, else the highest ``vN.metadata.json`` / ``NNNNN-<uuid>
+- **discovery**: the highest ``vN.metadata.json`` / ``NNNNN-<uuid>
   .metadata.json`` in the metadata dir (the spec's two file-naming
-  conventions);
+  conventions); ``metadata/version-hint.text`` (HadoopCatalog) is a lower
+  bound only, so a stale hint never pins reads to an older version;
 - **snapshot selection**: current snapshot, explicit ``snapshot_id``, or
   ``as_of_ms`` resolved through ``snapshot-log`` (time travel);
 - **manifest walk**: Avro manifest list -> Avro manifests (``avro_ocf``
@@ -36,8 +36,10 @@ Iceberg library required:
 - **appends** commit a new snapshot under the HadoopCatalog protocol: new
   parquet files written by Spark, a new Avro manifest with per-file
   bounds, a manifest list carrying the prior snapshot's manifests, and
-  ``v(N+1).metadata.json`` published through the ``tableformat.LogStore``
-  conditional-put seam — a lost race raises instead of clobbering.
+  ``v(N+1).metadata.json`` published through ``tableformat._publish``,
+  the one commit step of all three formats — a lost race raises
+  ``ConcurrentCommitError`` instead of clobbering, and a put whose
+  acknowledgement was lost counts as committed.
 
 **Merge-on-read**: v2 position and equality DELETE files are APPLIED by
 ``read_iceberg_table`` (the shape Flink CDC writes constantly) — per-row
@@ -91,10 +93,9 @@ from pyspark.sql.types import (
     _parse_datatype_string,
 )
 
-from . import tableformat as _tf
 from .avro_ocf import read_ocf
-from .iceberg_export import _MANIFEST_ENTRY, _bound_bytes
-from .tableformat import ConcurrentCommitError
+from .iceberg_export import _MANIFEST_ENTRY, _bound_bytes, _publish_version
+from .tableformat import ConcurrentCommitError  # noqa: F401  (re-exported)
 
 _META_DIR = "metadata"
 
@@ -145,24 +146,35 @@ def metadata_versions(path: str) -> dict[int, str]:
 
 
 def read_metadata(path: str, version: int | None = None) -> dict:
-    """The table metadata dict: ``version`` if given, else the
-    version-hint's target when the hint exists and resolves, else the
-    highest discoverable version (the spec's listing fallback)."""
+    """The table metadata dict: ``version`` if given, else the newest
+    listed version. ``version-hint.text`` is only a lower bound, as in
+    iceberg-java's ``HadoopTableOperations.findVersion`` and the house
+    ``current_version``: it is written after the commit, best-effort, so a
+    commit whose hint write never happened (or a hint a slower writer
+    regressed) must not pin reads to an older version. A version above the
+    hint whose file does not parse yet is one a writer without an atomic
+    create is still writing, and the read takes the version below it; at
+    or below the hint the file was complete before the hint moved, so a
+    parse failure there raises."""
     versions = metadata_versions(path)
-    if version is None:
-        hint = os.path.join(_meta_dir(path), "version-hint.text")
-        if os.path.exists(hint):
-            with open(hint) as fh:
-                hv = int(fh.read().strip())
-            if hv in versions:
-                version = hv
-        if version is None:
-            if not versions:
-                raise FileNotFoundError(
-                    f"no metadata.json under {_meta_dir(path)}"
-                )
-            version = max(versions)
-    with open(versions[version]) as fh:
+    if version is not None:
+        return _load_metadata(versions[version])
+    try:
+        with open(os.path.join(_meta_dir(path), "version-hint.text")) as fh:
+            hint = int(fh.read().strip())
+    except (OSError, ValueError):
+        hint = -1
+    for v in sorted(versions, reverse=True):
+        try:
+            return _load_metadata(versions[v])
+        except json.JSONDecodeError:
+            if v <= hint:
+                raise
+    raise FileNotFoundError(f"no metadata.json under {_meta_dir(path)}")
+
+
+def _load_metadata(meta_file: str) -> dict:
+    with open(meta_file) as fh:
         meta = json.load(fh)
     fv = meta.get("format-version", 1)
     if fv not in (1, 2):
@@ -880,8 +892,9 @@ def _apply_deletes(spark: SparkSession, df: DataFrame,
     deletes match NULLs as equal and apply globally when their partition
     tuple is empty, else within their partition. Everything is JVM-side:
     per-row provenance comes from the parquet scan's ``_metadata`` struct
-    and application is anti-joins whose strategy is GATED on the delete
-    set's size: the manifests already carry each delete file's
+    and application is one anti-join for all position deletes plus one per
+    equality-id set (however many upserts wrote it), each GATED on its
+    delete set's size: the manifests already carry each delete file's
     ``record_count``, so choosing broadcast (small side, no shuffle of
     the 100 TB scan) vs shuffle-hash (a delete set too big to ship to
     every executor) costs zero extra jobs. A table whose deletes rival
@@ -943,15 +956,15 @@ def _apply_deletes(spark: SparkSession, df: DataFrame,
 
     if eqs:
         id_of = {f["id"]: f for f in fields}
-        # group delete files sharing (equality ids, partition, sequence):
-        # each group is one read + one null-safe anti-join
-        groups: dict[tuple, list[str]] = {}
-        group_rows: dict[tuple, int] = {}
+        # one frame and ONE null-safe anti-join per equality-id set: every
+        # delete file sharing the ids unions in, each row tagged with its
+        # file's sequence number and partition tuple, and the spec's rules
+        # ride in the join condition — so reads do not gain a join per
+        # upsert. No distinct: an anti-join ignores duplicate delete rows
+        sets: dict[str, list[tuple]] = {}
         for t in eqs:
-            key = (t[9], t[5], t[8])
-            groups.setdefault(key, []).append(_from_uri(t[1]))
-            group_rows[key] = group_rows.get(key, 0) + t[3]
-        for (eq_json, part_json, seq), dfiles in sorted(groups.items()):
+            sets.setdefault(t[9], []).append(t)
+        for eq_json, set_entries in sorted(sets.items()):
             eq_ids = json.loads(eq_json)
             missing = [i for i in eq_ids if i not in id_of]
             if missing:
@@ -960,34 +973,42 @@ def _apply_deletes(spark: SparkSession, df: DataFrame,
                     "in the snapshot schema"
                 )
             sub_fields = [id_of[i] for i in eq_ids]
-            has_ids = _footer_has_ids(sorted(dfiles), spark)
-            dparts = []
-            idf = sorted(f for f, h in has_ids.items() if h)
-            plainf = sorted(f for f, h in has_ids.items() if not h)
-            if idf:
-                dparts.append(_read_id_files(spark, idf, sub_fields))
-            if plainf:
-                dparts.append(_read_mapped_files(
-                    spark, [("{}", plainf)], sub_fields,
-                    _name_mapping(meta), {},
-                ))
-            ddf = dparts[0]
-            for p in dparts[1:]:
+            groups: dict[tuple, list[str]] = {}
+            for t in set_entries:
+                groups.setdefault((t[5], t[8]), []).append(_from_uri(t[1]))
+            has_ids = _footer_has_ids(
+                sorted(f for fs in groups.values() for f in fs), spark)
+            pieces = []
+            for (part_json, seq), dfiles in sorted(groups.items()):
+                idf = sorted(f for f in dfiles if has_ids[f])
+                plainf = sorted(f for f in dfiles if not has_ids[f])
+                dparts = []
+                if idf:
+                    dparts.append(_read_id_files(spark, idf, sub_fields))
+                if plainf:
+                    dparts.append(_read_mapped_files(
+                        spark, [("{}", plainf)], sub_fields,
+                        _name_mapping(meta), {},
+                    ))
+                pieces += [p.select(
+                    *[F.col(f"`{f['name']}`").alias(f"__del_{f['id']}")
+                      for f in sub_fields],
+                    F.lit(seq).alias("__del_seq"),
+                    F.lit(part_json).alias("__del_part"),
+                ) for p in dparts]
+            ddf = pieces[0]
+            for p in pieces[1:]:
                 ddf = ddf.unionByName(p)
-            ddf = ddf.select(*[
-                F.col(f"`{f['name']}`").alias(f"__del_{f['id']}")
-                for f in sub_fields
-            ]).distinct()
-            cond = F.lit(True)
+            # data_seq < delete_seq; a delete with an empty partition
+            # tuple applies globally, else within its partition
+            cond = (F.col("__del_seq") > F.col("__ice_seq")) & (
+                (F.col("__del_part") == F.lit("{}"))
+                | (F.col("__del_part") == F.col("__ice_part")))
             for f in sub_fields:
                 cond = cond & F.col(f"`{f['name']}`").eqNullSafe(
                     F.col(f"__del_{f['id']}"))
-            cond = cond & (F.lit(seq) > F.col("__ice_seq"))
-            if part_json != "{}":
-                cond = cond & (F.col("__ice_part") == F.lit(part_json))
-            df = df.join(
-                gated(ddf, group_rows[(eq_json, part_json, seq)]),
-                cond, "left_anti")
+            df = df.join(gated(ddf, sum(t[3] for t in set_entries)),
+                         cond, "left_anti")
 
     return df
 
@@ -1467,20 +1488,7 @@ def expire_iceberg_snapshots(path: str, keep_last: int = 1,
         "timestamp-ms": int(meta.get("last-updated-ms", 0)),
         "metadata-file": "file://" + versions[cur_v].replace(os.sep, "/"),
     })
-    new_v = cur_v + 1
-    final = os.path.join(_meta_dir(path), f"v{new_v}.metadata.json")
-    try:
-        _tf._LOG_STORE.put_if_absent(final, json.dumps(newmeta, indent=2))
-    except FileExistsError:
-        raise ConcurrentCommitError(
-            f"{final}: another writer committed metadata version {new_v} "
-            "first; re-read the table and retry the expiry"
-        ) from None
-    hint = os.path.join(_meta_dir(path), "version-hint.text")
-    tmp = f"{hint}.{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write(str(new_v))
-    os.replace(tmp, hint)
+    new_v = _publish_version(path, cur_v + 1, newmeta)
 
     # storage only the expired snapshots reach: their manifest lists, and
     # manifests no retained snapshot references
@@ -1709,21 +1717,7 @@ def _publish_metadata(path: str, newmeta: dict, versions: dict,
     })
     newmeta["last-updated-ms"] = int(
         now_ms if now_ms is not None else time.time() * 1000)
-    new_v = cur_v + 1
-    final = os.path.join(_meta_dir(path), f"v{new_v}.metadata.json")
-    try:
-        _tf._LOG_STORE.put_if_absent(final, json.dumps(newmeta, indent=2))
-    except FileExistsError:
-        raise ConcurrentCommitError(
-            f"{final}: another writer committed metadata version {new_v} "
-            "first; re-read the table and retry"
-        ) from None
-    hint = os.path.join(_meta_dir(path), "version-hint.text")
-    tmp = f"{hint}.{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write(str(new_v))
-    os.replace(tmp, hint)
-    return new_v
+    return _publish_version(path, cur_v + 1, newmeta)
 
 
 def delete_iceberg_where(spark: SparkSession, path: str, column: str,
@@ -2296,21 +2290,7 @@ def _commit_snapshot(path: str, newmeta: dict, cur_meta_file: str,
 
     if cur_v is None:  # legacy callers: best-effort, still conditional
         cur_v = max(metadata_versions(path))
-    new_v = cur_v + 1
-    final = os.path.join(_meta_dir(path), f"v{new_v}.metadata.json")
-    try:
-        _tf._LOG_STORE.put_if_absent(final, json.dumps(newmeta, indent=2))
-    except FileExistsError:
-        raise ConcurrentCommitError(
-            f"{final}: another writer committed metadata version {new_v} "
-            "first; re-read the table and retry the operation"
-        ) from None
-    hint = os.path.join(_meta_dir(path), "version-hint.text")
-    tmp = f"{hint}.{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write(str(new_v))
-    os.replace(tmp, hint)  # advisory: readers fall back to listing
-    return new_v
+    return _publish_version(path, cur_v + 1, newmeta)
 
 
 def create_iceberg_table(path: str, columns: list[tuple],
@@ -2368,19 +2348,7 @@ def create_iceberg_table(path: str, columns: list[tuple],
         "metadata-log": [],
     }
     os.makedirs(_meta_dir(path), exist_ok=True)
-    final = os.path.join(_meta_dir(path), "v1.metadata.json")
-    try:
-        _tf._LOG_STORE.put_if_absent(final, json.dumps(meta, indent=2))
-    except FileExistsError:
-        raise ConcurrentCommitError(
-            f"{final}: table already created by another writer"
-        ) from None
-    hint = os.path.join(_meta_dir(path), "version-hint.text")
-    tmp = f"{hint}.{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write("1")
-    os.replace(tmp, hint)
-    return 1
+    return _publish_version(path, 1, meta)
 
 
 def iceberg_metadata_table(spark: SparkSession, path: str,

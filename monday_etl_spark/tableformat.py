@@ -57,11 +57,13 @@ Layout::
   and nothing of the winner's (manifest OR data files) can be touched.
   Every mutator (merge/delete/compact/zorder/rebucket/rename/drop) takes
   ``retries=N`` to re-derive against the new snapshot and retry, the
-  standard optimistic loop. The publish primitive is pluggable
-  (``LogStore.put_if_absent`` / ``set_log_store``): the local default is
-  tmp-write + atomic ``os.link``; an object-store deployment swaps in the
-  store's conditional put (S3 ``If-None-Match: *``) without touching any
-  other code — the seam Delta's LogStore / Iceberg's catalog occupy.
+  standard optimistic loop. ``_publish`` is the one commit step — the
+  Delta and Iceberg bridges publish through it too — and its primitive is
+  pluggable (``LogStore.put_if_absent`` / ``set_log_store``): the local
+  default is tmp-write + atomic ``os.link``; an object-store deployment
+  swaps in the store's conditional put (S3 ``If-None-Match: *``) without
+  touching any other code — the seam Delta's LogStore / Iceberg's catalog
+  occupy.
 
 Scale: manifests are O(n_buckets) file lists — KBs at 4096 buckets — so
 planning cost is constant in data size; per-bucket file lists mean a
@@ -78,6 +80,7 @@ import functools
 import glob as _glob
 import json
 import os
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -89,11 +92,13 @@ _REFS = "_refs"
 BUCKET_COL = "__bucket"
 
 
-class ConcurrentCommitError(RuntimeError):
+class ConcurrentCommitError(FileExistsError, RuntimeError):
     """Two writers raced to commit the same version: the second one loses
     and must re-read the table state and retry (optimistic concurrency,
     the Delta/Iceberg commit contract). Nothing was clobbered — the loser's
-    data files are orphans a later ``vacuum`` collects."""
+    data files are orphans a later ``vacuum`` collects. The one lost-race
+    error of all three formats; a ``FileExistsError`` too, the error the
+    conditional put itself raises."""
 
 
 def _keys(key) -> list[str]:
@@ -304,10 +309,7 @@ def _finish_vacuum(path: str, keep: list[int]) -> None:
       ``current_version`` falls back to a full listing (correct over O(1)),
       and it self-heals the moment a later vacuum restores density."""
     if keep:
-        tmp = f"{_hint_path(path)}.{os.getpid()}.tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(keep[-1]))
-        os.replace(tmp, _hint_path(path))
+        _write_hint(_hint_path(path), str(keep[-1]))
     dense = not keep or keep == list(range(keep[0], keep[-1] + 1))
     marker = _holes_marker_path(path)
     if dense:
@@ -373,17 +375,19 @@ def _resolve_manifest(path: str, version: int | None = None) -> dict:
 
 
 class LogStore:
-    """The publish primitive — the ONLY coordination the format needs from
-    its storage layer: atomically create ``final_path`` holding ``payload``
-    iff it does not already exist, raising ``FileExistsError`` when it does.
-    Everything else (data files, manifest reads) is plain immutable-blob
-    I/O. This default is the local/HDFS implementation: full write to a
-    unique temp name, then ``os.link`` (atomic, EEXIST on collision). An
-    object-store deployment swaps in a subclass whose ``put_if_absent`` is
-    the store's conditional put (S3 ``If-None-Match: *``, GCS
-    ``ifGenerationMatch=0``, Azure ``If-None-Match``) — the same seam
-    Delta's LogStore / Iceberg's catalog occupy — via ``set_log_store``;
-    nothing else in the format changes."""
+    """The publish primitive — the ONLY coordination the formats need from
+    their storage layer: atomically create ``final_path`` holding
+    ``payload`` iff it does not already exist, raising ``FileExistsError``
+    when it does. Everything else (data files, manifest reads) is plain
+    immutable-blob I/O. This default is the local/HDFS implementation: full
+    write to a unique temp name, then ``os.link`` (atomic, EEXIST on
+    collision). An object-store deployment swaps in a subclass whose
+    ``put_if_absent`` is the store's conditional put (S3
+    ``If-None-Match: *``, GCS ``ifGenerationMatch=0``, Azure
+    ``If-None-Match``) — the same seam Delta's LogStore / Iceberg's catalog
+    occupy — via ``set_log_store``; nothing else changes. Only
+    ``_publish`` calls it: house manifests and tags, every Delta commit
+    and export, every Iceberg metadata version and export."""
 
     def put_if_absent(self, final_path: str, payload: str) -> None:
         tmp = f"{final_path}.{os.getpid()}.{uuid.uuid4().hex[:8]}.tmp"
@@ -400,18 +404,67 @@ _LOG_STORE = LogStore()
 
 def set_log_store(store: LogStore) -> LogStore:
     """Swap the publish primitive (returns the previous store). Affects
-    manifest commits AND tag creation — every publish routes through it."""
+    every publish of all three formats — they all route through
+    ``_publish``."""
     global _LOG_STORE
     prev = _LOG_STORE
     _LOG_STORE = store
     return prev
 
 
+def _publish(final: str, payload: str,
+             hint: tuple[str, str] | None = None) -> None:
+    """Publish ``payload`` as ``final`` through the log store's conditional
+    put — the one commit step of every format. If ``final`` already exists
+    byte-identical to ``payload``, the put landed and only its
+    acknowledgement was lost (S3 timeout, duplicate delivery, a
+    backend-internal retry): that is this commit, an idempotent success.
+    Commit payloads carry a per-attempt wall-clock stamp or random id, so
+    two different writers cannot produce identical bytes; an export's
+    payload is a function of its snapshot, so re-exporting one snapshot is
+    the same commit. Anything else is a lost race:
+    ``ConcurrentCommitError``. ``hint`` is an optional
+    ``(path, text)`` advisory pointer written afterwards, best-effort:
+    readers treat it as a lower bound, so losing it (or a racing writer's
+    rename landing after a newer one) only costs probe steps."""
+    try:
+        _LOG_STORE.put_if_absent(final, payload)
+    except FileExistsError:
+        try:
+            with open(final) as fh:
+                landed = fh.read() == payload
+        except OSError:
+            landed = False
+        if not landed:
+            m = re.match(r"v?(\d+)\.", os.path.basename(final))
+            what = f"version {int(m.group(1))}" if m else final
+            raise ConcurrentCommitError(
+                f"{what} already committed at {final}: another writer won "
+                "the race — re-read the table and retry"
+            ) from None
+    if hint is not None:
+        with contextlib.suppress(OSError):
+            _write_hint(*hint)
+
+
+def _write_hint(hint_path: str, text: str) -> None:
+    """Replace an advisory pointer file: unique temp write, then rename."""
+    tmp = f"{hint_path}.{os.getpid()}.{uuid.uuid4().hex[:8]}.tmp"
+    try:
+        with open(tmp, "w") as fh:
+            fh.write(text)
+        os.replace(tmp, hint_path)
+    except OSError:
+        with contextlib.suppress(OSError):
+            os.unlink(tmp)
+        raise
+
+
 def _commit(path: str, manifest: dict) -> None:
-    """Version exists iff its manifest does. Put-if-absent via the log
-    store: of two writers racing to commit the same version number exactly
-    one wins and the other gets ``ConcurrentCommitError`` (a last-wins
-    rename would silently clobber the winner)."""
+    """Version exists iff its manifest does. Of two writers racing to
+    commit the same version number exactly one wins and the other gets
+    ``ConcurrentCommitError`` (a last-wins rename would silently clobber
+    the winner); the ``_latest`` hint follows (see ``current_version``)."""
     import time
 
     # wall-clock commit stamp: powers read_as_of / vacuum retention windows.
@@ -419,40 +472,8 @@ def _commit(path: str, manifest: dict) -> None:
     # correctness — versions stay totally ordered by number
     manifest.setdefault("committed_at", time.time())
     os.makedirs(os.path.join(path, _MANIFESTS), exist_ok=True)
-    final = _manifest_path(path, manifest["version"])
-    payload = json.dumps(manifest)
-    try:
-        _LOG_STORE.put_if_absent(final, payload)
-    except FileExistsError:
-        # Lost-ack recovery (the classic object-store ambiguity: the
-        # conditional put landed but the response didn't — S3 timeout,
-        # duplicate delivery, backend-internal retry): if the object that
-        # "already exists" is byte-identical to OUR payload, our write
-        # won and this attempt is an idempotent success. Anything else is
-        # a genuine lost race. committed_at is stamped per attempt, so
-        # two different writers cannot produce identical bytes.
-        try:
-            with open(final) as fh:
-                existing = fh.read()
-        except OSError:
-            existing = None
-        if existing != payload:
-            raise ConcurrentCommitError(
-                f"version {manifest['version']} already committed at "
-                f"{path}: another writer won the race — re-read "
-                "current_version and retry"
-            ) from None
-    # best-effort latest-version hint (see current_version): a lower bound,
-    # never authoritative — losing this write (or a racing writer's rename
-    # landing after a newer one) only costs probe steps, never correctness
-    hint_tmp = f"{_hint_path(path)}.{os.getpid()}.tmp"
-    try:
-        with open(hint_tmp, "w") as fh:
-            fh.write(str(manifest["version"]))
-        os.replace(hint_tmp, _hint_path(path))
-    except OSError:
-        with contextlib.suppress(OSError):
-            os.unlink(hint_tmp)
+    _publish(_manifest_path(path, manifest["version"]), json.dumps(manifest),
+             hint=(_hint_path(path), str(manifest["version"])))
 
 
 def _new_commit_dir(path: str, version: int) -> str:
@@ -1696,9 +1717,11 @@ class RefError(RuntimeError):
     """Tag name collision (create) or unknown tag (resolve/delete)."""
 
 
-def _ref_path(path: str, name: str) -> str:
-    import re
+class TagExistsError(RefError, ConcurrentCommitError):
+    """``create_tag`` lost to an existing tag of the same name."""
 
+
+def _ref_path(path: str, name: str) -> str:
     if not re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9._-]{0,127}", name):
         raise RefError(f"invalid tag name: {name!r}")
     return os.path.join(path, _REFS, f"{name}.json")
@@ -1720,9 +1743,9 @@ def create_tag(path: str, name: str, version: int | None = None) -> int:
         {"name": name, "version": version, "created_at": time.time()}
     )
     try:
-        _LOG_STORE.put_if_absent(final, payload)
-    except FileExistsError:
-        raise RefError(f"tag {name!r} already exists at {path}") from None
+        _publish(final, payload)
+    except ConcurrentCommitError:
+        raise TagExistsError(f"tag {name!r} already exists at {path}") from None
     return version
 
 

@@ -927,3 +927,92 @@ def test_cow_rewrite_carries_prior_tombstones(spark, tmp_path):
         spark, path, from_snapshot_id=s1).collect()}
     assert feed == {(3, "delete"), (4, "delete"), (5, "delete"),
                     (3, "insert"), (4, "insert")}
+
+
+def test_stale_version_hint_does_not_pin_reads(spark, tmp_path):
+    """``version-hint.text`` is a lower bound: a commit whose hint write
+    never happened is visible, a hint regressed below the newest version
+    does not pin reads, and explicit ``metadata_version=`` reads are
+    unchanged — on both the import and the export read paths. Only above
+    the hint may a version be still in flight."""
+    from monday_etl_spark.iceberg_export import read_iceberg_meta
+
+    path = str(tmp_path / "hint")
+    df = spark.createDataFrame(
+        [(i, float(i)) for i in range(40)], "id bigint, v double")
+    write_versioned(df, path, key="id", n_buckets=2, stats_cols=["id"])
+    export_iceberg(path)
+    more = spark.createDataFrame(
+        [(i, float(i)) for i in range(100, 105)], "id bigint, v double")
+    assert append_iceberg(spark, more, path) == 2
+    hint = os.path.join(path, "metadata", "version-hint.text")
+
+    # v2 landed, its hint write did not: the hint still says 1
+    with open(hint, "w") as fh:
+        fh.write("1")
+    assert read_metadata(path) == read_metadata(path, 2)
+    assert read_iceberg_meta(path) == read_metadata(path, 2)
+    assert _rows(read_iceberg_table(spark, path)) == \
+        _rows(df.unionByName(more))
+
+    # a slower writer's hint regressed below the newest version
+    assert append_iceberg(spark, more, path) == 3
+    with open(hint, "w") as fh:
+        fh.write("2")
+    assert read_metadata(path) == read_metadata(path, 3)
+    assert len(_rows(read_iceberg_table(spark, path))) == 50
+
+    # explicit versions still pin
+    assert _rows(read_iceberg_table(spark, path, metadata_version=1)) == \
+        _rows(df)
+    assert len(_rows(read_iceberg_table(
+        spark, path, metadata_version=2))) == 45
+
+    # a version file above the hint that does not parse yet is still
+    # being written: reads take the version below it. At or below the
+    # hint it was complete once, so a parse failure raises
+    with open(metadata_versions(path)[3], "w"):
+        pass
+    assert read_metadata(path) == read_metadata(path, 2)
+    with open(hint, "w") as fh:
+        fh.write("3")
+    with pytest.raises(json.JSONDecodeError):
+        read_metadata(path)
+
+
+def test_read_jobs_flat_in_live_equality_deletes(spark, tmp_path):
+    """Every upsert adds an equality-delete file; they share one id set,
+    so a read applies them in ONE anti-join: the jobs of the read's
+    action (frame built outside the job group) stay flat (±1) from 1 to
+    8 live delete files, and the rows are the upserts' net effect."""
+    from monday_etl_spark.iceberg_import import upsert_iceberg
+
+    path = str(tmp_path / "mor")
+    n = 400
+    write_versioned(
+        spark.createDataFrame([(i, 0.0) for i in range(n)],
+                              "id bigint, v double"),
+        path, key="id", n_buckets=4, stats_cols=["id"])
+    export_iceberg(path)
+    want = {i: 0.0 for i in range(n)}
+    sc = spark.sparkContext
+    jobs = {}
+    for k in range(1, 9):
+        rows = [(i, float(k)) for i in range(k * 7, n + 10, 13)]
+        upsert_iceberg(spark, spark.createDataFrame(
+            rows, "id bigint, v double"), path, "id")
+        want.update(dict(rows))
+        if k not in (1, 2, 4, 8):
+            continue
+        df = read_iceberg_table(spark, path)
+        group = f"iceberg-read-jobs-{k}"
+        sc.setJobGroup(group, "read_iceberg_table")
+        try:
+            got = dict(df.collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[k] = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert got == want
+    assert max(jobs.values()) - min(jobs.values()) <= 1, jobs

@@ -50,3 +50,24 @@ def test_ivf_subset_and_recall(spark, emb, centroids):
 
     recall = len(bf_sims.keys() & {(r.query_id, r.neighbor_id) for r in ivf_rows}) / len(bf_sims)
     assert recall > 0.2  # nprobe=2 of 8 cells; exact recall is data-dependent
+
+
+
+def test_caller_helper_named_columns_change_nothing(spark, emb, centroids):
+    """The scorers' hoisted-norm columns take fresh names: a cell-assigned
+    corpus that already carries ``__qn`` and ``__cn`` columns scores
+    exactly like one without them."""
+    from monday_etl_spark.extensions.ivf import (
+        assign_cells,
+        scored_cells,
+        topk_against_cells,
+    )
+
+    queries = emb.filter(F.col("vec_id") < 10)
+    c = assign_cells(emb, centroids)
+    tagged = c.withColumn("__qn", F.lit(-1.0)).withColumn("__cn", F.lit(-1.0))
+    for score in (
+        lambda cells: topk_against_cells(cells, queries, centroids, k=5),
+        lambda cells: scored_cells(cells, queries, centroids),
+    ):
+        assert sorted(score(tagged).collect()) == sorted(score(c).collect())
