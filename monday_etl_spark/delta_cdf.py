@@ -22,11 +22,12 @@ consumer shape this serves: per-version change rows with
 ``_change_type`` / ``_commit_version`` / ``_commit_timestamp``, ready
 for the same aggregation the reference runs over its two snapshots.
 
-Scale shape: change-data and reconstruction scans are ordinary
-per-partition-tuple parquet scans (same plan as ``read_delta``); DV
-positions for removed files decode on executors via the same
-one-task-per-vector path the snapshot reader uses; the driver only
-parses commit JSON (bounded per version, never row data).
+Scale shape: change-data and reconstruction scans are built by
+``delta_import._scan``, the one scan every Delta read uses (change-data
+files add ``_change_type`` to its file schema), so column mapping,
+partition literals and the deletion-vector anti-join for removed files
+are the snapshot reader's own; the driver only parses commit JSON
+(bounded per version, never row data).
 """
 
 from __future__ import annotations
@@ -37,14 +38,13 @@ import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField
 
 from .delta_import import (
     DeltaProtocolError,
     _checkpoint_at_or_below,
-    _dv_pair_positions,
     _list_commits,
-    _partition_literal,
+    _scan,
     _snapshot_state,
     commit_timestamps,
 )
@@ -54,123 +54,6 @@ __all__ = ["read_delta_changes"]
 # one plan piece (or more) per commit: past this, refuse with the remedy
 # (bounded windows) instead of building a plan that grows without bound
 _CDF_MAX_COMMITS = 256
-
-
-def _part_key_order(kv):
-    return tuple((v is None, v or "") for v in kv[0])
-
-
-def _scan_entries(
-    spark: SparkSession,
-    table_path: str,
-    schema: StructType,
-    part_cols: list[str],
-    entries: list[tuple[str, dict, dict | None]],
-    extra_data_fields: list[StructField] = (),
-    meta: dict | None = None,
-) -> DataFrame:
-    """One logical scan over ``entries`` = [(relpath, partitionValues,
-    dv-or-None)]: schema from the log, partition columns injected as
-    typed literals, deletion vectors applied via the executor-decoded
-    anti-join. ``extra_data_fields`` widens the file schema (the CDF
-    files carry ``_change_type`` in the data — always under its literal
-    name, never mapped). Under column mapping (``meta`` carries
-    ``delta.columnMapping.mode``) data columns and partitionValues are
-    keyed by PHYSICAL names (mode=name) or resolved by field id
-    (mode=id) exactly as ``read_delta`` does, and the result surfaces
-    logical names."""
-    from .delta_import import (
-        _id_requested_schema,
-        _mapping_mode,
-        _physical_names,
-    )
-
-    phys = _physical_names(meta) if meta else None
-    mode_id = bool(meta) and _mapping_mode(meta) == "id"
-    data_fields = [f for f in schema.fields if f.name not in part_cols]
-    if mode_id:
-        data_schema = StructType(
-            _id_requested_schema(spark, meta, data_fields).fields
-            + list(extra_data_fields))
-    else:
-        data_schema = StructType(
-            [StructField(phys[f.name] if phys else f.name,
-                         f.dataType, True) for f in data_fields]
-            + list(extra_data_fields)
-        )
-    out_names = ([f.name for f in schema.fields]
-                 + [f.name for f in extra_data_fields])
-
-    by_part: dict[tuple, list[str]] = {}
-    dv_by_abs: dict[str, dict] = {}
-    for rel, pv, dv in entries:
-        dec = urllib.parse.unquote(rel)
-        absf = os.path.abspath(
-            dec if os.path.isabs(dec) else os.path.join(table_path, dec))
-        # under column mapping partitionValues are keyed by physical name
-        key = tuple(
-            pv.get(phys[c], pv.get(c)) if phys else pv.get(c)
-            for c in part_cols
-        )
-        by_part.setdefault(key, []).append(absf)
-        if dv:
-            dv_by_abs[absf] = dv
-
-    with_dv = bool(dv_by_abs)
-    meta_cols = [
-        F.regexp_replace(
-            F.col("_metadata.file_path"), r"^[A-Za-z0-9+.-]+:/+", "/"
-        ).alias("__dv_src"),
-        F.col("_metadata.row_index").alias("__dv_idx"),
-    ]
-    pieces = []
-    for key, files in sorted(by_part.items(), key=_part_key_order):
-        df = spark.read.schema(data_schema).parquet(*files)
-        if with_dv:
-            df = df.select("*", *meta_cols)
-        for c, v in zip(part_cols, key):
-            df = df.withColumn(
-                c if (mode_id or not phys) else phys[c],
-                _partition_literal(v, schema[c].dataType))
-        extra_names = [f.name for f in extra_data_fields]
-        if mode_id or not phys:
-            cols = [F.col(n) for n in out_names]
-        else:
-            cols = [
-                (F.col(n) if n in extra_names
-                 else F.col(phys[n]).alias(n))
-                for n in out_names
-            ]
-        if with_dv:
-            cols += [F.col("__dv_src"), F.col("__dv_idx")]
-        pieces.append(df.select(*cols))
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    if dv_by_abs:
-        pairs = sorted(
-            (absf, json.dumps(dv)) for absf, dv in dv_by_abs.items())
-        tp = table_path
-        rdd = (spark.sparkContext.parallelize(pairs, len(pairs))
-               .flatMap(lambda t: _dv_pair_positions(tp, t)))
-        pos_df = spark.createDataFrame(rdd, "__dvp string, __dvi bigint")
-        # same zero-job strategy gate as read_delta: descriptors declare
-        # their cardinality, so a delete-heavy history degrades to a
-        # shuffle-hash anti-join instead of a multi-GB broadcast
-        from .delta_import import _DV_BROADCAST_MAX_ROWS
-
-        n_del = sum(int(dv.get("cardinality") or 0)
-                    for dv in dv_by_abs.values())
-        pos_df = (F.broadcast(pos_df)
-                  if n_del <= _DV_BROADCAST_MAX_ROWS
-                  else pos_df.hint("shuffle_hash"))
-        out = out.join(
-            pos_df,
-            (F.col("__dv_src") == F.col("__dvp"))
-            & (F.col("__dv_idx") == F.col("__dvi")),
-            "left_anti",
-        ).select(*out_names)
-    return out
 
 
 def _check_cdf_enabled_over(spark, path: str, commits: dict[int, str],
@@ -334,8 +217,6 @@ def read_delta_changes(
     _check_cdf_enabled_over(spark, path, commits,
                             starting_version, ending_version)
 
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    part_cols = meta.get("partitionColumns") or []
     ct_field = [StructField("_change_type", StringType(), True)]
 
     pieces: list[DataFrame] = []
@@ -367,12 +248,11 @@ def read_delta_changes(
                         f"version {v}: change-data file {c['path']!r} "
                         "has been vacuumed; this version's change feed "
                         "is gone")
-            df = _scan_entries(
-                spark, path, schema, part_cols,
+            df = _scan(
+                spark, path, meta,
                 [(c["path"], c.get("partitionValues") or {}, None)
                  for c in cdc],
-                extra_data_fields=ct_field,
-                meta=meta,
+                extra_fields=ct_field,
             )
             pieces.append(_stamp(df, v, ts))
             continue
@@ -386,11 +266,10 @@ def read_delta_changes(
                 "the vectors and cannot be reconstructed from "
                 "add/remove actions")
         if adds:
-            df = _scan_entries(
-                spark, path, schema, part_cols,
+            df = _scan(
+                spark, path, meta,
                 [(a["path"], a.get("partitionValues") or {}, None)
                  for a in adds],
-                meta=meta,
             ).withColumn("_change_type", F.lit("insert"))
             pieces.append(_stamp(df, v, ts))
         removed = [r for r in removes if r["path"] not in add_paths]
@@ -409,16 +288,12 @@ def read_delta_changes(
                 entries.append((r["path"],
                                 a.get("partitionValues") or {},
                                 a.get("deletionVector")))
-            df = _scan_entries(spark, path, schema, part_cols, entries,
-                               meta=meta) \
+            df = _scan(spark, path, meta, entries) \
                 .withColumn("_change_type", F.lit("delete"))
             pieces.append(_stamp(df, v, ts))
 
     if not pieces:
-        empty = StructType(
-            schema.fields
-            + [StructField("_change_type", ct_field[0].dataType, True)])
-        return (spark.createDataFrame([], empty)
+        return (_scan(spark, path, meta, [], extra_fields=ct_field)
                 .withColumn("_commit_version", F.lit(None).cast("long"))
                 .withColumn("_commit_timestamp",
                             F.lit(None).cast("timestamp")))

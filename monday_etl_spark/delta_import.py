@@ -21,13 +21,17 @@ Reading = log replay:
    (each is small by construction — Delta writers checkpoint every ~10
    commits precisely so this tail stays short): ``add`` inserts by path,
    ``remove`` deletes, latest ``metaData``/``protocol`` win;
-4. files are grouped by their ``partitionValues`` tuple and each group is
-   scanned ONCE with the snapshot schema (missing columns in old files
-   surface as NULL — additive evolution just works); partition columns
-   are injected as typed literals per the spec's serialization (they are
-   not stored in the data files);
-5. ``read_delta_where`` prunes the file list against the per-file
-   ``stats`` min/max BEFORE any Spark scan — the import-side twin of
+4. one function, ``_scan``, builds every data scan — snapshot, pruned
+   and change-feed reads alike: files are grouped by their
+   ``partitionValues`` tuple and each group is scanned ONCE with the
+   snapshot schema (missing columns in old files surface as NULL —
+   additive evolution just works); partition columns are injected as
+   typed literals per the spec's serialization (they are not stored in
+   the data files), and deletion vectors apply as an anti-join;
+5. ``read_delta_where`` resolves ONE snapshot, prunes its file list
+   against the per-file ``stats`` min/max BEFORE any Spark scan (on
+   partitioned and deletion-vector tables too), and hands the survivors
+   to the same ``_scan`` — the import-side twin of
    ``tableformat.read_where``.
 
 Appending = one parquet write + one put-if-absent commit: new data files
@@ -58,9 +62,11 @@ treat lower-numbered batches as replays (the same rule delta-spark's
 Column mapping (modes ``name`` and ``id``) and DELETION VECTORS are
 implemented: ``read_delta`` applies a file's DV as an anti-join on the
 scan's ``_metadata`` row provenance, decoding the spec's Z85 / roaring
-bitmap formats (``roaring.py``) on executors. Honest refusals remain
-where a surface cannot carry the semantics: path-level pruning
-(``files_for_range``) and the streaming source refuse DV files loudly,
+bitmap formats (``roaring.py``) on executors; ``read_delta_where`` and
+the change feed apply them through the same scan. Honest refusals
+remain where a surface cannot carry the semantics: path-level pruning
+(``files_for_range``, when a file it returns carries a vector) and the
+streaming source refuse DV files loudly,
 ``write_checkpoint`` carries deletion vectors AND table-features protocol
 lists through verbatim (a checkpoint that dropped either would resurrect
 deleted rows / write a spec-invalid v3+ protocol action), and appends
@@ -81,7 +87,7 @@ import urllib.parse
 import uuid
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -453,9 +459,9 @@ def _nested_id_type(dt):
 
 _DV_ERR = (
     "{path}: carries a deletion vector this surface cannot apply "
-    "(path-level pruning, streaming, checkpoint rewrite) — reading the "
-    "file whole would resurrect deleted rows; use read_delta, which "
-    "applies deletion vectors"
+    "(path-level pruning, streaming) — reading the file whole would "
+    "resurrect deleted rows; use read_delta or read_delta_where, which "
+    "apply deletion vectors"
 )
 
 _ADD_FIELDS = ("path", "partitionValues", "size", "modificationTime",
@@ -482,10 +488,11 @@ class _LiveSet:
     the same contract delta-spark has for its log tail. When a checkpoint
     exists, its add rows STAY a DataFrame (a 100 TB table's checkpoint
     carries millions of add actions — materializing them costs GBs of
-    driver heap, the r07 audit finding); the short JSON tail overlays it,
-    and each accessor collects only what its read needs: file paths +
-    partition values for a scan, and range pruning evaluates the per-file
-    stats Spark-side, returning surviving paths only."""
+    driver heap, the r07 audit finding); the short JSON tail overlays it.
+    Scans list through ``file_entries`` — paths, partition values and
+    vectors, optionally pruned by one column's stats Spark-side — in one
+    capped collect; commit paths take whole add actions through
+    ``materialize``."""
 
     def __init__(self, spark: SparkSession, ckpt_adds: DataFrame | None,
                  tail_adds: dict[str, dict], tail_removes: set[str]):
@@ -509,98 +516,58 @@ class _LiveSet:
             raise DeltaProtocolError(_DV_ERR.format(path=add["path"]))
         return add
 
-    def has_dv(self) -> bool:
-        """Whether any surviving add carries a deletion vector."""
-        if any(a.get("deletionVector") for a in self._tail.values()):
-            return True
-        ck = self._ckpt_surviving()
-        if ck is not None and "deletionVector" in ck.columns:
-            return bool(
-                ck.filter(F.col("deletionVector").isNotNull()).head(1)
+    @staticmethod
+    def _collect_capped(df: DataFrame, held: int) -> list:
+        """``df``'s rows in one collect, refusing past the driver cap with
+        ``held`` entries already listed: planning needs the file list on
+        the driver (every engine's planner does), but an unbounded
+        collect on a pathological multi-million-file state would OOM it.
+        ``SPARK_GRAFT_MAX_LIVE_FILES`` overrides for genuinely huge
+        tables."""
+        cap = int(os.environ.get("SPARK_GRAFT_MAX_LIVE_FILES", "2000000"))
+        room = max(cap - held, 0)
+        rows = df.limit(room + 1).collect()
+        if len(rows) > room:
+            raise DeltaProtocolError(
+                f"live file set has more than {cap} entries, over the "
+                f"{cap} driver cap — compact the table, or raise "
+                "SPARK_GRAFT_MAX_LIVE_FILES if the driver has the memory "
+                "for a list this size"
             )
-        return False
+        return rows
 
-    def file_entries(self, allow_dv: bool = False) -> list[dict]:
-        """[{path, partitionValues, deletionVector?}] for a scan — never
-        the stats blobs. Callers that APPLY deletion vectors pass
-        ``allow_dv``; everyone else refuses loudly rather than
-        resurrecting deleted rows."""
-        guard = (lambda a: a) if allow_dv else self._guard_dv
-        out = [
-            {"path": a["path"],
-             "partitionValues": a.get("partitionValues") or {},
-             "deletionVector": a.get("deletionVector")}
-            for a in map(guard, self._tail.values())
-        ]
+    def file_entries(self, column: str | None = None, lo=None, hi=None
+                     ) -> tuple[list[tuple], int]:
+        """``([(path, partitionValues, deletionVector-or-None)], total
+        live files)`` for a scan — never the stats blobs. With a
+        ``column`` (its stats key), only files whose min/max may
+        intersect ``[lo, hi]`` are listed; a file without stats for it
+        can never be pruned (sound). Checkpoint rows are filtered
+        Spark-side and counted by an observation of the same collect, so
+        only surviving entries return to the driver."""
+        out = [(a["path"], a.get("partitionValues") or {},
+                a.get("deletionVector"))
+               for a in self._tail.values()
+               if column is None
+               or _stats_may_overlap(a.get("stats"), column, lo, hi)]
+        total = len(self._tail)
         ck = self._ckpt_surviving()
         if ck is not None:
-            # planning needs the file list on the driver (every engine's
-            # planner does), but an unbounded collect on a pathological
-            # multi-million-file state would OOM it — refuse at the cap
-            # with the remedy named. Same bound as materialize().
-            cap = int(os.environ.get(
-                "SPARK_GRAFT_MAX_LIVE_FILES", "2000000"))
-            n_ck = ck.count()
-            if n_ck + len(out) > cap:
-                raise DeltaProtocolError(
-                    f"live file set has {n_ck + len(out)} entries, over "
-                    f"the {cap} driver cap — compact the table, or raise "
-                    "SPARK_GRAFT_MAX_LIVE_FILES if the driver has the "
-                    "memory for a list this size"
-                )
-            cols = [F.col("path"), F.col("partitionValues")]
-            have_dv = "deletionVector" in ck.columns
-            if have_dv:
-                cols.append(F.to_json("deletionVector").alias("dvj"))
-            for r in ck.select(*cols).collect():
-                dv = (json.loads(r["dvj"])
-                      if have_dv and r["dvj"] else None)
-                if dv and not allow_dv:
-                    raise DeltaProtocolError(_DV_ERR.format(path=r["path"]))
-                out.append({"path": r["path"],
-                            "partitionValues":
-                                dict(r["partitionValues"] or {}),
-                            "deletionVector": dv})
-        return out
-
-    def prune_range(self, column: str, lo, hi) -> tuple[list[str], int]:
-        """(paths whose stats may intersect [lo, hi], total live files).
-        Checkpoint rows evaluate Spark-side; only surviving paths return
-        to the driver. A file without stats for ``column`` can never be
-        pruned (sound)."""
-        total, keep = 0, []
-        for a in map(self._guard_dv, self._tail.values()):
-            total += 1
-            stats = a.get("stats")
-            if stats:
-                s = json.loads(stats) if isinstance(stats, str) else stats
-                mins = s.get("minValues") or {}
-                maxs = s.get("maxValues") or {}
-                if column in mins and column in maxs:
-                    if maxs[column] < lo or mins[column] > hi:
-                        continue
-            keep.append(a["path"])
-        ck = self._ckpt_surviving()
-        if ck is not None:
-            cast = ("double" if isinstance(lo, (int, float))
-                    and not isinstance(lo, bool) else "string")
-            mn = F.get_json_object("stats", f"$.minValues.{column}") \
-                .cast(cast)
-            mx = F.get_json_object("stats", f"$.maxValues.{column}") \
-                .cast(cast)
-            survives = (mn.isNull() | mx.isNull()
-                        | ~((mx < F.lit(lo)) | (mn > F.lit(hi))))
-            cols = [F.col("path"), survives.alias("keep")]
-            have_dv = "deletionVector" in ck.columns
-            if have_dv:
-                cols.append(F.col("deletionVector").isNotNull().alias("dv"))
-            for r in ck.select(*cols).collect():
-                if have_dv and r["dv"]:
-                    raise DeltaProtocolError(_DV_ERR.format(path=r["path"]))
-                total += 1
-                if r["keep"]:
-                    keep.append(r["path"])
-        return keep, total
+            dvj = (F.to_json("deletionVector")
+                   if "deletionVector" in ck.columns
+                   else F.lit(None).cast("string"))
+            if column is not None:
+                obs = Observation()
+                ck = (ck.observe(obs, F.count(F.lit(1)).alias("n"))
+                      .filter(_ckpt_may_overlap(column, lo, hi)))
+            rows = self._collect_capped(
+                ck.select("path", "partitionValues", dvj.alias("dvj")),
+                len(out))
+            total += len(rows) if column is None else obs.get["n"]
+            out += [(r["path"], dict(r["partitionValues"] or {}),
+                     json.loads(r["dvj"]) if r["dvj"] else None)
+                    for r in rows]
+        return out, total
 
     def add_actions_df(self) -> DataFrame:
         """Every surviving add as a DataFrame in the checkpoint's add-struct
@@ -651,31 +618,18 @@ class _LiveSet:
             ))
         return df
 
-    # -- full materialization: tests and tail-only contexts. Checkpoint-
-    # -- backed snapshots pay the driver cost here and ONLY here. Bounded:
-    # -- building a scan requires the file list on the driver (every
-    # -- engine's planner does), but an unbounded collect on a
-    # -- pathological multi-million-file table would OOM the driver with
-    # -- a confusing stack — refuse at the cap with the remedy named.
-    # -- SPARK_GRAFT_MAX_LIVE_FILES overrides for genuinely huge tables.
     def materialize(self, allow_dv: bool = False) -> dict[str, dict]:
-        cap = int(os.environ.get("SPARK_GRAFT_MAX_LIVE_FILES", "2000000"))
-        guard = (lambda a: a) if allow_dv else self._guard_dv
+        """{path: add action} of every surviving file, stats included —
+        the commit paths' view. Checkpoint-backed snapshots pay the
+        driver cost here, bounded by the same cap as ``file_entries``."""
         out = dict(self._tail)
         ck = self._ckpt_surviving()
         if ck is not None:
-            n_ck = ck.count()
-            if n_ck + len(out) > cap:
-                raise DeltaProtocolError(
-                    f"live file set has {n_ck + len(out)} entries, over "
-                    f"the {cap} driver cap — compact the table, or raise "
-                    "SPARK_GRAFT_MAX_LIVE_FILES if the driver has the "
-                    "memory for a list this size"
-                )
-            for r in ck.collect():
-                out[r["path"]] = guard(_row_to_add(r))
-        for a in out.values():
-            guard(a)
+            for r in self._collect_capped(ck, len(out)):
+                out[r["path"]] = _row_to_add(r)
+        if not allow_dv:
+            for a in out.values():
+                self._guard_dv(a)
         return out
 
     def items(self):
@@ -684,10 +638,26 @@ class _LiveSet:
     def values(self):
         return self.materialize().values()
 
-    def __len__(self):
-        ck = self._ckpt_surviving()
-        n = 0 if ck is None else ck.count()
-        return n + len(self._tail)
+
+def _stats_may_overlap(stats, column: str, lo, hi) -> bool:
+    """Whether a tail add's ``stats`` min/max may intersect [lo, hi]."""
+    if not stats:
+        return True
+    s = json.loads(stats) if isinstance(stats, str) else stats
+    mins = s.get("minValues") or {}
+    maxs = s.get("maxValues") or {}
+    if column in mins and column in maxs:
+        return not (maxs[column] < lo or mins[column] > hi)
+    return True
+
+
+def _ckpt_may_overlap(column: str, lo, hi):
+    """``_stats_may_overlap`` as a column over checkpoint add rows."""
+    cast = ("double" if isinstance(lo, (int, float))
+            and not isinstance(lo, bool) else "string")
+    mn = F.get_json_object("stats", f"$.minValues.{column}").cast(cast)
+    mx = F.get_json_object("stats", f"$.maxValues.{column}").cast(cast)
+    return mn.isNull() | mx.isNull() | ~((mx < F.lit(lo)) | (mn > F.lit(hi)))
 
 
 def _sidecar_paths(path: str, names: list[str]) -> list[str]:
@@ -1074,106 +1044,97 @@ def _dv_pair_positions(table_path: str, pair: tuple) -> list[tuple]:
             for p in _dv_positions(table_path, json.loads(dvj))]
 
 
-def read_delta(
-    spark: SparkSession, path: str, version: int | None = None,
-    timestamp_ms: int | None = None,
-    _with_provenance: bool = False,
+def _scan(
+    spark: SparkSession, path: str, meta: dict, entries: list[tuple],
+    extra_fields=(), provenance: bool = False,
 ) -> DataFrame:
-    """Snapshot read of a Delta table at ``version`` (default latest) or
-    AS OF ``timestamp_ms`` (the latest commit at or before it).
-    One scan per distinct partition tuple, schema from the log (NOT from
-    footers — old files missing later-added columns surface NULLs), and
-    partition columns injected as typed literals per the spec. Files
-    carrying DELETION VECTORS read whole and lose their deleted rows via
-    an anti-join on the scan's ``_metadata`` row provenance — vectors
-    decode on EXECUTORS (one task per DV file), so a table with millions
-    of deleted rows never materializes them on the driver."""
-    if timestamp_ms is not None:
-        if version is not None:
-            raise ValueError("give version OR timestamp_ms, not both")
-        version = version_at_or_before(path, timestamp_ms)
-    # canonicalize ONCE: the DV anti-join matches file paths against the
-    # scan's _metadata.file_path, which Hadoop qualifies to an absolute
-    # path — a relative/`..`-laden table path would silently match
-    # nothing and resurrect every deleted row
-    path = os.path.abspath(path)
-    snap = _snapshot_state(spark, path, version)
-    meta, live = snap.meta, snap.live
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    phys = _physical_names(meta)  # {logical: physical} under mapping
-    mode_id = _mapping_mode(meta) == "id"
-    part_cols = meta.get("partitionColumns") or []
+    """The one Delta data scan over ``entries`` = [(relpath,
+    partitionValues, deletionVector-or-None)] of the table at absolute
+    ``path``. One scan per distinct partition tuple (sorted, NULL last),
+    schema from the log (NOT from footers — old files missing
+    later-added columns surface NULLs), and partition columns injected
+    as typed literals per the spec. Under column mapping, data columns
+    and partitionValues are keyed by PHYSICAL name (mode=name) or
+    resolved by field id (mode=id); the result surfaces logical names.
+    ``extra_fields`` widen the file schema under their literal names
+    (change-data files carry ``_change_type``). Files carrying DELETION
+    VECTORS read whole and lose their deleted rows via an anti-join on
+    the scan's ``_metadata`` row provenance — vectors decode on
+    EXECUTORS (one task per DV file), so a table with millions of
+    deleted rows never materializes them on the driver. ``provenance``
+    keeps ``__dv_src``/``__dv_idx`` on the result for DV-writing
+    callers."""
     from pyspark.sql.types import StructField
+
+    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    extra = list(extra_fields)
+    # {logical: physical} under mapping; refuses unreadable nested renames
+    # even when no file is live
+    phys = _physical_names(meta)
+    if not entries:
+        return spark.createDataFrame(
+            [], StructType(_strip_mapping_meta(schema).fields + extra))
+    part_cols = meta.get("partitionColumns") or []
     data_fields = [f for f in schema.fields if f.name not in part_cols]
-    if mode_id:
-        data_schema = _id_requested_schema(spark, meta, data_fields)
+    if _mapping_mode(meta) == "id":
+        stored: dict[str, str] = {}  # requested by logical name + field id
+        data_schema = StructType(
+            _id_requested_schema(spark, meta, data_fields).fields + extra)
     else:
+        stored = phys or {}
         data_schema = StructType([
-            StructField(phys[f.name] if phys else f.name, f.dataType, True)
+            StructField(stored.get(f.name, f.name), f.dataType, True)
             for f in data_fields
-        ])
+        ] + extra)
+    out_names = [f.name for f in schema.fields] + [f.name for f in extra]
+
     by_part: dict[tuple, list[str]] = {}
     dv_by_abs: dict[str, dict] = {}
-    for entry in live.file_entries(allow_dv=True):
-        rel = urllib.parse.unquote(entry["path"])
-        absf = rel if os.path.isabs(rel) else os.path.join(path, rel)
-        pv = entry["partitionValues"]
+    for rel, pv, dv in entries:
+        dec = urllib.parse.unquote(rel)
+        # absolute: the DV anti-join matches these against the scan's
+        # _metadata.file_path, which Hadoop qualifies to an absolute path
+        absf = os.path.abspath(
+            dec if os.path.isabs(dec) else os.path.join(path, dec))
         # under column mapping partitionValues are keyed by physical names
-        key = tuple(
-            pv.get(phys[c], pv.get(c)) if phys else pv.get(c)
-            for c in part_cols
-        )
+        key = tuple(pv.get(phys[c], pv.get(c)) if phys else pv.get(c)
+                    for c in part_cols)
         by_part.setdefault(key, []).append(absf)
-        if entry.get("deletionVector"):
-            dv_by_abs[absf] = entry["deletionVector"]
+        if dv:
+            dv_by_abs[absf] = dv
 
-    if not by_part:
-        return spark.createDataFrame([], _strip_mapping_meta(schema))
-
-    with_dv = bool(dv_by_abs) or _with_provenance
-    meta_cols = [
-        F.regexp_replace(
-            F.col("_metadata.file_path"), r"^[A-Za-z0-9+.-]+:/+", "/"
-        ).alias("__dv_src"),
-        F.col("_metadata.row_index").alias("__dv_idx"),
-    ]
+    with_pos = bool(dv_by_abs) or provenance
+    pos = [F.col("__dv_src"), F.col("__dv_idx")] if with_pos else []
     pieces = []
     # None-safe ordering: a NULL partition value sorts after the strings
-    part_order = lambda kv: tuple(  # noqa: E731
-        (v is None, v or "") for v in kv[0]
-    )
-    for key, files in sorted(by_part.items(), key=part_order):
+    for key, files in sorted(
+            by_part.items(),
+            key=lambda kv: tuple((v is None, v or "") for v in kv[0])):
         df = spark.read.schema(data_schema).parquet(*files)
-        if with_dv:
-            df = df.select("*", *meta_cols)
+        if with_pos:
+            df = df.select(
+                "*",
+                F.regexp_replace(F.col("_metadata.file_path"),
+                                 r"^[A-Za-z0-9+.-]+:/+", "/")
+                .alias("__dv_src"),
+                F.col("_metadata.row_index").alias("__dv_idx"))
         for c, v in zip(part_cols, key):
-            df = df.withColumn(
-                c if mode_id else (phys[c] if phys else c),
-                _partition_literal(v, schema[c].dataType),
-            )
-        extra = ([F.col("__dv_src"), F.col("__dv_idx")]
-                 if with_dv else [])
-        if mode_id:
-            pieces.append(df.select(
-                *[F.col(f.name) for f in schema.fields], *extra))
-        else:
-            pieces.append(df.select(*(
-                [F.col(phys[f.name]).alias(f.name) if phys
-                 else F.col(f.name) for f in schema.fields] + extra
-            )))
+            df = df.withColumn(stored.get(c, c),
+                               _partition_literal(v, schema[c].dataType))
+        pieces.append(df.select(*[
+            F.col(stored[n]).alias(n) if n in stored else F.col(n)
+            for n in out_names
+        ], *pos))
     out = pieces[0]
     for p in pieces[1:]:
         out = out.unionByName(p)
     if dv_by_abs:
         pairs = sorted(
-            (absf, json.dumps(dv)) for absf, dv in dv_by_abs.items()
-        )
-        table_path = path
+            (absf, json.dumps(dv)) for absf, dv in dv_by_abs.items())
         rdd = (spark.sparkContext
                .parallelize(pairs, len(pairs))
-               .flatMap(lambda t: _dv_pair_positions(table_path, t)))
-        pos_df = spark.createDataFrame(
-            rdd, "__dvp string, __dvi bigint")
+               .flatMap(lambda t: _dv_pair_positions(path, t)))
+        pos_df = spark.createDataFrame(rdd, "__dvp string, __dvi bigint")
         # strategy gate at zero cost: every DV descriptor declares its
         # cardinality, so the deleted-row total is known before any job.
         # Small sets broadcast (no shuffle of the scan side); a delete-
@@ -1190,12 +1151,32 @@ def read_delta(
             & (F.col("__dv_idx") == F.col("__dvi")),
             "left_anti",
         )
-    if with_dv:
-        keep = [F.col(f.name) for f in schema.fields]
-        if _with_provenance:
-            keep += [F.col("__dv_src"), F.col("__dv_idx")]
-        out = out.select(*keep)
+    if with_pos:
+        out = out.select(*out_names, *(pos if provenance else []))
     return out
+
+
+def read_delta(
+    spark: SparkSession, path: str, version: int | None = None,
+    timestamp_ms: int | None = None,
+    _with_provenance: bool = False,
+) -> DataFrame:
+    """Snapshot read of a Delta table at ``version`` (default latest) or
+    AS OF ``timestamp_ms`` (the latest commit at or before it): every
+    live file through :func:`_scan`, deletion vectors applied."""
+    if timestamp_ms is not None:
+        if version is not None:
+            raise ValueError("give version OR timestamp_ms, not both")
+        version = version_at_or_before(path, timestamp_ms)
+    # canonicalize ONCE: the DV anti-join matches file paths against the
+    # scan's _metadata.file_path, which Hadoop qualifies to an absolute
+    # path — a relative/`..`-laden table path would silently match
+    # nothing and resurrect every deleted row
+    path = os.path.abspath(path)
+    snap = _snapshot_state(spark, path, version)
+    entries, _total = snap.live.file_entries()
+    return _scan(spark, path, snap.meta, entries,
+                 provenance=_with_provenance)
 
 
 def _strip_mapping_meta(schema: StructType) -> StructType:
@@ -1204,6 +1185,16 @@ def _strip_mapping_meta(schema: StructType) -> StructType:
     return StructType([
         StructField(f.name, f.dataType, f.nullable) for f in schema.fields
     ])
+
+
+def _pruned_entries(snap: _Snapshot, column: str, lo, hi
+                    ) -> tuple[list[tuple], int]:
+    """``snap``'s live entries whose stats may intersect ``lo <= column
+    <= hi``, and the total live count. Stats are keyed by physical name
+    under column mapping."""
+    phys = _physical_names(snap.meta)
+    return snap.live.file_entries(
+        phys.get(column, column) if phys else column, lo, hi)
 
 
 def files_for_range(
@@ -1217,13 +1208,16 @@ def files_for_range(
     """(matching absolute files, total live files) — stats-based pruning
     over the adds' minValues/maxValues, before any Spark scan. A file
     without stats for ``column`` can never be pruned (sound, like
-    tableformat.read_where)."""
-    snap = _snapshot_state(spark, path, version)
-    phys = _physical_names(snap.meta)
-    scol = phys.get(column, column) if phys else column  # stats keys: physical
-    kept, total = snap.live.prune_range(scol, lo, hi)
+    tableformat.read_where). A returned file that carries a deletion
+    vector refuses: callers read the listed files whole, which would
+    resurrect its deleted rows (:func:`read_delta_where` applies it)."""
+    path = os.path.abspath(path)
+    entries, total = _pruned_entries(
+        _snapshot_state(spark, path, version), column, lo, hi)
     keep = []
-    for rel in kept:
+    for rel, _pv, dv in entries:
+        if dv:
+            raise DeltaProtocolError(_DV_ERR.format(path=rel))
         rel = urllib.parse.unquote(rel)
         keep.append(rel if os.path.isabs(rel) else os.path.join(path, rel))
     return keep, total
@@ -1237,36 +1231,15 @@ def read_delta_where(
     hi,
     version: int | None = None,
 ) -> DataFrame:
-    """Range read with manifest-side data skipping: only stats-matching
-    files reach the scan; the exact predicate still applies on top."""
-    snap_state = _snapshot_state(spark, path, version)
-    meta = snap_state.meta
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    phys = _physical_names(meta)
-    if meta.get("partitionColumns") or snap_state.live.has_dv():
-        # partition columns aren't in footers, and deletion vectors need
-        # the applying read; fall back to the full read (file pruning is
-        # lost but correctness isn't — the exact predicate still applies)
-        df = read_delta(spark, path, version)
-        return df.filter(F.col(column).between(lo, hi))
-    files, _total = files_for_range(spark, path, column, lo, hi, version)
-    if not files:
-        return spark.createDataFrame([], _strip_mapping_meta(schema))
-    from pyspark.sql.types import StructField
-    if _mapping_mode(meta) == "id":
-        read_schema = _id_requested_schema(spark, meta, schema.fields)
-        df = spark.read.schema(read_schema).parquet(*files)
-        return df.filter(F.col(column).between(lo, hi))
-    read_schema = StructType([
-        StructField(phys[f.name] if phys else f.name, f.dataType, True)
-        for f in schema.fields
-    ])
-    df = spark.read.schema(read_schema).parquet(*files)
-    if phys:
-        df = df.select(*[
-            F.col(phys[f.name]).alias(f.name) for f in schema.fields
-        ])
-    return df.filter(F.col(column).between(lo, hi))
+    """Range read with data skipping, pinned to ONE snapshot: only files
+    whose stats may intersect ``[lo, hi]`` reach :func:`_scan` — on
+    partitioned and deletion-vector tables too, whose vectors the scan
+    applies — and the exact predicate still applies on top."""
+    path = os.path.abspath(path)
+    snap = _snapshot_state(spark, path, version)
+    entries, _total = _pruned_entries(snap, column, lo, hi)
+    return (_scan(spark, path, snap.meta, entries)
+            .filter(F.col(column).between(lo, hi)))
 
 
 # ------------------------------------------------------------- checkpoints

@@ -345,28 +345,41 @@ def _live_entries_df(spark: SparkSession,
     return df.filter(F.col("status").isin(0, 1))
 
 
+def _manifest_live(arg, want_bounds: bool, keep) -> tuple[int, list[tuple]]:
+    """(live entries in one manifest, those of them ``keep`` accepts —
+    all when ``keep`` is None). Runs on executors for large tables."""
+    live = [t for t in _decode_manifest(arg, want_bounds=want_bounds)
+            if t[0] in (0, 1)]
+    return len(live), [t for t in live if keep is None or keep(t)]
+
+
+def _live_entries_kept(spark: SparkSession, mans: list[tuple],
+                       want_bounds: bool = False, keep=None
+                       ) -> tuple[list[tuple], int]:
+    """(the live ADDED/EXISTING entry tuples ``keep`` accepts — all of
+    them when it is None — and the total live count) for scan planning,
+    from ONE decode of each manifest.
+    Small manifest sets decode driver-side (no job); larger sets decode
+    on EXECUTORS — one task per manifest, one job — and only the kept
+    tuples and a count per manifest return (the driver must still hold
+    the surviving paths to build the scan, but never pays the Avro
+    decode or the deleted-entry churn of a million-file table's
+    manifests)."""
+    if len(mans) <= _DRIVER_DECODE_MAX_MANIFESTS:
+        per = [_manifest_live(m, want_bounds, keep) for m in mans]
+    else:
+        one = _manifest_live  # bind for the closure
+        per = (spark.sparkContext
+               .parallelize(mans, len(mans))
+               .map(lambda m: one(m, want_bounds, keep))
+               .collect())
+    return [tuple(t) for _n, ts in per for t in ts], sum(n for n, _ in per)
+
+
 def _live_entry_tuples(spark: SparkSession, mans: list[tuple],
                        want_bounds: bool = False) -> list[tuple]:
-    """Live (ADDED/EXISTING) entry tuples for scan planning. Small
-    manifest sets decode driver-side (no job); larger sets decode on
-    EXECUTORS — one task per manifest — and only the projected, dead-
-    entry-filtered tuples return (the driver must still hold the
-    surviving paths to build the scan, but never pays the Avro decode or
-    the deleted-entry churn of a million-file table's manifests)."""
-    if len(mans) <= _DRIVER_DECODE_MAX_MANIFESTS:
-        return [t for m in mans
-                for t in _decode_manifest(m, want_bounds=want_bounds)
-                if t[0] in (0, 1)]
-    dec = _decode_manifest  # bind for the closure
-
-    def live(arg):
-        return [t for t in dec(arg, want_bounds=want_bounds)
-                if t[0] in (0, 1)]
-
-    rdd = (spark.sparkContext
-           .parallelize(mans, len(mans))
-           .flatMap(live))
-    return [tuple(t) for t in rdd.collect()]
+    """Every live (ADDED/EXISTING) entry tuple of ``mans``."""
+    return _live_entries_kept(spark, mans, want_bounds)[0]
 
 
 def _split_manifests(meta: dict, snap: dict) -> tuple[list[tuple], list[tuple]]:
@@ -1050,40 +1063,20 @@ def _entry_survives(t: tuple, key: str, ice_type: str | None,
     return not (mx < lo or mn > hi)
 
 
-def _pruned_entries(spark: SparkSession, meta: dict, snap: dict,
-                    fields: list[dict], column: str, lo, hi,
-                    data_mans: list[tuple]) -> tuple[list[tuple], int]:
+def _pruned_entries(spark: SparkSession, fields: list[dict], column: str,
+                    lo, hi, data_mans: list[tuple]
+                    ) -> tuple[list[tuple], int]:
     """``(surviving live entry tuples, total live files)`` for
-    ``lo <= column <= hi`` from manifest bounds. Small manifest sets
-    decide driver-side (no Spark job); larger sets decode and decide on
-    EXECUTORS, returning only survivors to the driver."""
+    ``lo <= column <= hi`` from manifest bounds, in one decode pass."""
     fld = next((f for f in fields if f["name"] == column), None)
     if fld is None:
         raise ValueError(f"column {column!r} not in table schema")
     ice_type = fld["type"] if isinstance(fld["type"], str) else None
     key = str(fld["id"])
-
-    if len(data_mans) <= _DRIVER_DECODE_MAX_MANIFESTS:
-        live = [t for m in data_mans for t in _decode_manifest(m)
-                if t[0] in (0, 1)]
-        keep = [t for t in live
-                if _entry_survives(t, key, ice_type, lo, hi)]
-        return keep, len(live)
-
     surv = _entry_survives  # bind for the closure
-
-    def decide(arg):
-        return [t for t in _decode_manifest(arg)
-                if t[0] in (0, 1) and surv(t, key, ice_type, lo, hi)]
-
-    rdd = (spark.sparkContext
-           .parallelize(data_mans, len(data_mans))
-           .flatMap(decide))
-    kept = rdd.collect()
-    total = int(
-        _live_entries_df(spark, data_mans).count()
-    )
-    return [tuple(t) for t in kept], total
+    return _live_entries_kept(
+        spark, data_mans, want_bounds=True,
+        keep=lambda t: surv(t, key, ice_type, lo, hi))
 
 
 def iceberg_files_where(spark: SparkSession, path: str, column: str,
@@ -1097,8 +1090,7 @@ def iceberg_files_where(spark: SparkSession, path: str, column: str,
     snap = _select_snapshot(meta, snapshot_id, None)
     fields = _schema_for(meta, {} if snapshot_id is None else snap)["fields"]
     data_mans = _live_manifest_paths(meta, snap)
-    keep, total = _pruned_entries(
-        spark, meta, snap, fields, column, lo, hi, data_mans)
+    keep, total = _pruned_entries(spark, fields, column, lo, hi, data_mans)
     return sorted(_from_uri(t[1]) for t in keep), total
 
 
@@ -1114,8 +1106,7 @@ def read_iceberg_where(spark: SparkSession, path: str, column: str,
     snap = _select_snapshot(meta, snapshot_id, None)
     fields = _schema_for(meta, {} if snapshot_id is None else snap)["fields"]
     data_mans, del_mans = _split_manifests(meta, snap)
-    keep, _total = _pruned_entries(
-        spark, meta, snap, fields, column, lo, hi, data_mans)
+    keep, _total = _pruned_entries(spark, fields, column, lo, hi, data_mans)
     del_entries = _live_entry_tuples(spark, del_mans)
     df = _assemble_read(spark, meta, fields, keep, del_entries)
     return df.filter(F.col(f"`{column}`").between(lo, hi))

@@ -806,6 +806,38 @@ def test_many_manifests_use_distributed_decode(spark, tmp_path):
     assert sorted(r.id for r in rng.collect()) == [500, 501, 502]
 
 
+def test_distributed_pruned_listing_is_one_job(spark, tmp_path,
+                                               monkeypatch):
+    """Past the driver-decode threshold, the pruned listing decodes each
+    manifest ONCE: survivors and per-manifest live counts return from
+    one job, and equal what the driver-side decode lists."""
+    from monday_etl_spark import iceberg_import
+
+    path = str(tmp_path / "onejob")
+    write_versioned(
+        spark.createDataFrame([(i, float(i)) for i in range(10)],
+                              "id bigint, v double"),
+        path, key="id", n_buckets=1, stats_cols=["id"])
+    export_iceberg(path)
+    for k in range(10):
+        append_iceberg(spark, spark.createDataFrame(
+            [(100 * (k + 1) + j, 0.0) for j in range(3)],
+            "id bigint, v double").coalesce(1), path)
+    sc = spark.sparkContext
+    group = "iceberg-pruned-listing"
+    sc.setJobGroup(group, "iceberg_files_where")
+    try:
+        keep, total = iceberg_files_where(spark, path, "id", 500, 620)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    monkeypatch.setattr(iceberg_import, "_DRIVER_DECODE_MAX_MANIFESTS", 10**6)
+    assert (keep, total) == iceberg_files_where(spark, path, "id", 500, 620)
+    assert len(keep) == 2 and total == 11
+
+
 def _plan_of(df) -> str:
     import contextlib
     import io
