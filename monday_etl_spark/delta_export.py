@@ -9,7 +9,8 @@ actions beside plain parquet data files. A snapshot export therefore
 needs ZERO data movement: the table's existing immutable parquet files
 are referenced by relative path from ``add`` actions, and any Delta
 reader (delta-spark, delta-rs, DuckDB's delta extension, Trino) opens the
-same directory as a Delta table.
+same directory as a Delta table. The referenced files are zstd-compressed
+Parquet (the session's codec, see ``session``), which all of these read.
 
 What is written (Delta log version 0, one commit file):
 

@@ -58,6 +58,17 @@ from .tableformat import (
 
 _META_DIR = "metadata"
 
+# Snapshot ids span [10**18, 2**62): every id has 19 decimal digits in
+# metadata JSON and a 9-byte zigzag varint in Avro, so metadata sizes do
+# not depend on which id was drawn (the spec asks only for a unique long).
+_SNAPSHOT_ID_LO, _SNAPSHOT_ID_HI = 10**18, 1 << 62
+
+
+def _snapshot_id(source: int) -> int:
+    """Map a 128-bit source (a uuid's ``.int``) to a snapshot id."""
+    return _SNAPSHOT_ID_LO + source % (_SNAPSHOT_ID_HI - _SNAPSHOT_ID_LO)
+
+
 # Spark schema-JSON type name -> Iceberg primitive type
 _TYPES = {
     "long": "long", "integer": "int", "short": "int", "byte": "int",
@@ -373,7 +384,7 @@ def export_iceberg(path: str, version: int | None = None) -> str:
         uuid.NAMESPACE_URL,
         f"monday-etl-spark-iceberg:{table_loc}@v{version}",
     ))
-    snapshot_id = uuid.UUID(token).int & ((1 << 62) - 1)
+    snapshot_id = _snapshot_id(uuid.UUID(token).int)
     meta_dir = os.path.join(path, _META_DIR)
     os.makedirs(meta_dir, exist_ok=True)
 

@@ -94,7 +94,12 @@ from pyspark.sql.types import (
 )
 
 from .avro_ocf import read_ocf
-from .iceberg_export import _MANIFEST_ENTRY, _bound_bytes, _publish_version
+from .iceberg_export import (
+    _MANIFEST_ENTRY,
+    _bound_bytes,
+    _publish_version,
+    _snapshot_id,
+)
 from .tableformat import ConcurrentCommitError  # noqa: F401  (re-exported)
 
 _META_DIR = "metadata"
@@ -1583,9 +1588,7 @@ def append_iceberg(spark: SparkSession, df: DataFrame, path: str,
                                   f"append-{token}")
 
     seq = int(meta.get("last-sequence-number", 0)) + 1
-    snapshot_id = uuid.uuid4().int & ((1 << 62) - 1)
-    now_ms = (int(os.stat(rel_files[0][0]).st_mtime * 1000)
-              if rel_files else 0)
+    snapshot_id = _snapshot_id(uuid.uuid4().int)
 
     manifest_path, n_entries, total_rows = _data_manifest(
         path, rel_files, fields, part_fields, spec_fields, spec_id,
@@ -1598,6 +1601,7 @@ def append_iceberg(spark: SparkSession, df: DataFrame, path: str,
     list_path = _write_manifest_list(
         path, snapshot_id, seq, token, carried + [new_entry],
         snap_prev["snapshot-id"] if snap_prev else None)
+    now_ms = _commit_ms(rel_files, list_path)
 
     # ---- new metadata, committed via the conditional-put seam
     newmeta = json.loads(json.dumps(meta))  # deep copy
@@ -1758,7 +1762,7 @@ def delete_iceberg_where(spark: SparkSession, path: str, column: str,
                  for n in sorted(os.listdir(out_dir))
                  if n.endswith(".parquet")]
     seq = int(meta.get("last-sequence-number", 0)) + 1
-    snapshot_id = uuid.uuid4().int & ((1 << 62) - 1)
+    snapshot_id = _snapshot_id(uuid.uuid4().int)
     newmeta = json.loads(json.dumps(meta))
     del_spec = _ensure_unpartitioned_spec(newmeta)
     man_path, n_files, n_positions = _data_manifest(
@@ -1777,7 +1781,7 @@ def delete_iceberg_where(spark: SparkSession, path: str, column: str,
     list_path = _write_manifest_list(
         path, snapshot_id, seq, token, carried + [del_rec],
         snap["snapshot-id"])
-    now_ms = int(os.stat(del_files[0][0]).st_mtime * 1000)
+    now_ms = _commit_ms(del_files, list_path)
     return _commit_snapshot(
         path, newmeta, versions[cur_v], snapshot_id, seq, now_ms,
         list_path,
@@ -1891,7 +1895,7 @@ def _cow_overwrite(spark: SparkSession, path: str, column: str,
 
     token = uuid.uuid4().hex
     seq = int(meta.get("last-sequence-number", 0)) + 1
-    snapshot_id = uuid.uuid4().int & ((1 << 62) - 1)
+    snapshot_id = _snapshot_id(uuid.uuid4().int)
 
     surv = rewrite(
         live.filter(F.col("__ice_src").isin(sorted(affected))), cond
@@ -1996,8 +2000,7 @@ def _cow_overwrite(spark: SparkSession, path: str, column: str,
             n_added_files, added_rows))
     list_path = _write_manifest_list(
         path, snapshot_id, seq, token, records, snap["snapshot-id"])
-    now_ms = (int(os.stat(rel_files[0][0]).st_mtime * 1000) if rel_files
-              else int(os.stat(list_path).st_mtime * 1000))
+    now_ms = _commit_ms(rel_files, list_path)
     newmeta = json.loads(json.dumps(meta))
     return _commit_snapshot(
         path, newmeta, versions[cur_v], snapshot_id, seq, now_ms,
@@ -2109,7 +2112,7 @@ def upsert_iceberg(spark: SparkSession, df: DataFrame, path: str,
 
     token = uuid.uuid4().hex
     seq = int(meta.get("last-sequence-number", 0)) + 1
-    snapshot_id = uuid.uuid4().int & ((1 << 62) - 1)
+    snapshot_id = _snapshot_id(uuid.uuid4().int)
 
     newmeta = json.loads(json.dumps(meta))
     del_spec = _ensure_unpartitioned_spec(newmeta)
@@ -2143,8 +2146,7 @@ def upsert_iceberg(spark: SparkSession, df: DataFrame, path: str,
     ]
     list_path = _write_manifest_list(
         path, snapshot_id, seq, token, records, snap["snapshot-id"])
-    now_ms = (int(os.stat(rel_files[0][0]).st_mtime * 1000)
-              if rel_files else 0)
+    now_ms = _commit_ms(rel_files, list_path)
     _ensure_name_mapping(newmeta, fields)
     return _commit_snapshot(
         path, newmeta, versions[cur_v], snapshot_id, seq, now_ms,
@@ -2212,7 +2214,7 @@ def compact_iceberg(spark: SparkSession, path: str) -> int:
     rel_files = _write_data_files(typed, path, part_fields,
                                   f"compact-{token}")
     seq = int(meta.get("last-sequence-number", 0)) + 1
-    snapshot_id = uuid.uuid4().int & ((1 << 62) - 1)
+    snapshot_id = _snapshot_id(uuid.uuid4().int)
     man_path, n_files, total_rows = _data_manifest(
         path, rel_files, fields, part_fields, spec_fields, spec_id,
         schema, seq, snapshot_id, token, spark=spark)
@@ -2220,8 +2222,7 @@ def compact_iceberg(spark: SparkSession, path: str) -> int:
         man_path, spec_id, 0, seq, snapshot_id, n_files, total_rows)
     list_path = _write_manifest_list(
         path, snapshot_id, seq, token, [rec], snap["snapshot-id"])
-    now_ms = (int(os.stat(rel_files[0][0]).st_mtime * 1000)
-              if rel_files else 0)
+    now_ms = _commit_ms(rel_files, list_path)
     newmeta = json.loads(json.dumps(meta))
     return _commit_snapshot(
         path, newmeta, versions[cur_v], snapshot_id, seq, now_ms,
@@ -2233,6 +2234,14 @@ def compact_iceberg(spark: SparkSession, path: str) -> int:
         snap["snapshot-id"],
         cur_v=cur_v,
     )
+
+
+def _commit_ms(rel_files: list, list_path: str) -> int:
+    """A snapshot's timestamp: the mtime of its first data file, or of its
+    manifest list when it wrote none (an empty append, or a copy-on-write
+    delete that drops whole files), so no snapshot is stamped epoch 0."""
+    first = rel_files[0][0] if rel_files else list_path
+    return int(os.stat(first).st_mtime * 1000)
 
 
 def _commit_snapshot(path: str, newmeta: dict, cur_meta_file: str,

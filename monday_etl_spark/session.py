@@ -11,6 +11,22 @@ Design notes (100 TB north-star):
   match the DuckDB oracle regardless of host timezone.
 - Arrow enabled: every pandas interchange (toPandas, pandas_udf, applyInPandas)
   is Arrow-batched, never row-at-a-time pickling.
+
+Storage note: every Parquet file written under this session is
+zstd-compressed (``spark.sql.parquet.compression.codec=zstd``, Iceberg's own
+default Parquet codec since 1.4) at zstd's default level with v1 data pages:
+the daily snapshot and history, house commits, Delta data, Change Data Feed
+and checkpoint files, Iceberg data and delete files. Readers of these tables
+must support zstd Parquet; Spark, DuckDB, pyarrow, delta-rs and Trino do.
+Measured against Spark's default snappy (perfbench, seeds 11-20): the daily
+load writes 0.027 bytes per source JSON byte instead of 0.052, and a
+lakehouse upsert day writes 93x its batch instead of 133x. perfbench's seed-1
+``orders`` table as 16 house buckets is 1.90 MB instead of 2.81 MB, and as 3
+plain files 1.81 MB instead of 2.40 MB. DataPageV2
+(``parquet.writer.version=v2``) would save only 3-5% more (1.84 and 1.73 MB),
+and older readers reject V2 pages, so pages stay v1. The codec is a storage
+choice, not a correctness conf: it is set in the builder, not in
+RUNTIME_CONFS, so a session a caller builds and passes in keeps its codec.
 """
 
 from __future__ import annotations
@@ -87,6 +103,8 @@ def get_spark(app_name: str = DEFAULT_APP, shuffle_partitions: int | None = None
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # -- storage: zstd pages (see the storage note above) --
+        .config("spark.sql.parquet.compression.codec", "zstd")
         # -- python interchange --
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # -- joins: dims in this workload are small; let broadcast kick in --

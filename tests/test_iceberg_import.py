@@ -1048,3 +1048,66 @@ def test_read_jobs_flat_in_live_equality_deletes(spark, tmp_path):
         jobs[k] = len(sc.statusTracker().getJobIdsForGroup(group))
         assert got == want
     assert max(jobs.values()) - min(jobs.values()) <= 1, jobs
+
+
+def test_snapshot_ids_fixed_width_and_metadata_bytes_reproducible(
+        spark, tmp_path):
+    """Every snapshot id lies in [10**18, 2**62): 19 decimal digits and a
+    9-byte zigzag varint, so two identical write sequences (export, two
+    upserts, an append, a compaction) on table paths of equal length write
+    metadata files of equal sizes, whichever ids were drawn."""
+    from monday_etl_spark.iceberg_export import _snapshot_id
+    from monday_etl_spark.iceberg_import import compact_iceberg, upsert_iceberg
+
+    lo, hi = 10**18, 1 << 62
+    assert _snapshot_id(0) == lo
+    assert lo <= _snapshot_id((1 << 128) - 1) < hi
+
+    sizes = []
+    for side in ("a", "b"):
+        path = str(tmp_path / side / "t")
+        write_versioned(spark.createDataFrame(
+            [(i, float(i)) for i in range(60)], "id bigint, v double"),
+            path, key="id", n_buckets=4, stats_cols=["id"])
+        export_iceberg(path)
+        for k in (10, 40):
+            upsert_iceberg(spark, spark.createDataFrame(
+                [(i, 1000.0 + i) for i in range(k, k + 15)],
+                "id bigint, v double"), path, key="id")
+        append_iceberg(spark, spark.createDataFrame(
+            [(i, float(i)) for i in range(100, 110)], "id bigint, v double"),
+            path)
+        compact_iceberg(spark, path)
+        meta = read_metadata(path)
+        ids = [s["snapshot-id"] for s in meta["snapshots"]]
+        assert len(ids) == 5 and all(lo <= i < hi for i in ids), ids
+        mdir = os.path.join(path, "metadata")
+        names = os.listdir(mdir)
+        sizes.append((
+            {n: os.path.getsize(os.path.join(mdir, n))
+             for n in names if n.endswith(".metadata.json")},
+            sorted(os.path.getsize(os.path.join(mdir, n))
+                   for n in names if n.endswith(".avro")),
+        ))
+    assert sizes[0] == sizes[1]
+
+
+def test_empty_partitioned_append_keeps_wall_clock_timestamp(
+        spark, tmp_path):
+    """An append that writes no data file still commits a snapshot; its
+    timestamp comes from its manifest list, never epoch 0."""
+    from monday_etl_spark.iceberg_import import create_iceberg_table
+
+    path = str(tmp_path / "empty")
+    create_iceberg_table(path, [("id", "long"), ("d", "string")],
+                         partition_by=[("d", "identity")])
+    df = spark.createDataFrame([(1, "x"), (2, "y")], "id long, d string")
+    append_iceberg(spark, df, path)
+    append_iceberg(spark, df.limit(0), path)
+    meta = read_metadata(path)
+    parent, empty = meta["snapshots"][-2:]
+    assert empty["summary"]["added-data-files"] == "0"
+    assert empty["timestamp-ms"] >= parent["timestamp-ms"] > 0
+    log = {e["snapshot-id"]: e["timestamp-ms"] for e in meta["snapshot-log"]}
+    assert log[empty["snapshot-id"]] == empty["timestamp-ms"]
+    assert meta["last-updated-ms"] == empty["timestamp-ms"]

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Measure the Iceberg bridge paths at sf0.1 vs sf1 (10x data): export,
 full read, bounds-pruned read, append, and merge-on-read with position +
-equality deletes. One fresh table per scale under .scratch/; prints one
-JSON line per scale. Usage: python tools/iceberg_scale_rehearsal.py
+equality deletes; also the house write of the base table and its parquet
+bytes (the session's codec shows there). One fresh table per scale under
+.scratch/; prints one JSON line per scale. Usage: python tools/iceberg_scale_rehearsal.py
 """
 
 from __future__ import annotations
@@ -170,8 +171,11 @@ def main() -> None:
             "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
         )
         base = li.filter(F.col("l_orderkey") % 4 == 1)
-        write_versioned(base, path, key="l_orderkey", n_buckets=16,
-                        stats_cols=["l_orderkey", "l_extendedprice"])
+        _, t_write = timed(lambda: write_versioned(
+            base, path, key="l_orderkey", n_buckets=16,
+            stats_cols=["l_orderkey", "l_extendedprice"]))
+        base_bytes = sum(f.stat().st_size
+                         for f in Path(path).rglob("*.parquet"))
         _, t_export = timed(lambda: export_iceberg(path))
 
         def full_read():
@@ -238,6 +242,8 @@ def main() -> None:
             "scale": label,
             "base_rows": rows[0][0], "mor_rows": mor_rows[0][0],
             "post_dml_rows": post_rows[0][0],
+            "write_s": t_write,
+            "base_parquet_bytes": base_bytes,
             "export_s": t_export,
             "read_s": min(t_read1, t_read),
             "append_s": t_append,
