@@ -65,6 +65,7 @@ import uuid
 
 from .tableformat import (
     _commit_dir_of,
+    _committed_ms,
     _publish,
     _read_manifest,
     current_version,
@@ -176,7 +177,7 @@ def export_delta_log(path: str, version: int | None = None) -> str:
     man = _read_manifest(path, version)
     rel_files = sorted(f for fs in man["buckets"].values() for f in fs)
     phys_of = _naming_plan(man, rel_files)
-    committed_ms = int(float(man.get("committed_at", 0)) * 1000)
+    committed_ms = _committed_ms(man) or 0
     stats_map = man.get("stats", {}) or {}
 
     if phys_of is None:

@@ -91,7 +91,14 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .tableformat import ConcurrentCommitError, _publish
+from .tableformat import (
+    ConcurrentCommitError,
+    _files_to_compact,
+    _n_target_files,
+    _publish,
+    _target_file_bytes,
+    _target_sized,
+)
 
 _LOG_DIR = "_delta_log"
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
@@ -1625,11 +1632,17 @@ def upsert_delta(spark: SparkSession, df: DataFrame, path: str,
     writes ``survivors ∪ source`` once (survivors: those files' rows,
     deletion vectors applied, whose key the source lacks). No probe job,
     no second write; untouched files stay referenced, so cost tracks the
-    matched-file set, not the table. Both passes scan the snapshot the
-    commit builds on, so a commit landing in between makes the put lose
-    its race (``ConcurrentCommitError``). Change Data Feed tables also get
-    ``_change_data`` rows (``update_preimage``/``update_postimage`` for
-    matched keys, ``insert`` for the rest) + cdc actions, so
+    matched-file set, not the table. On an unpartitioned table pass 2
+    writes ``ceil(bytes / target)`` files (cut by
+    :func:`tableformat._target_sized`): bytes are the replaced files'
+    sizes plus Catalyst's size estimate of the source, the target is
+    ``spark.sql.files.maxPartitionBytes`` — so an upsert that rewrites
+    the whole table leaves nothing for :func:`compact_delta` to do. Both
+    passes scan the snapshot the commit builds on, so a commit landing
+    in between makes the put lose its race (``ConcurrentCommitError``).
+    Change Data Feed tables also get ``_change_data`` rows
+    (``update_preimage``/``update_postimage`` for matched keys,
+    ``insert`` for the rest) + cdc actions, so
     :func:`delta_cdf.read_delta_changes` serves the commit exactly.
     Source keys must be unique (the CDC upsert contract — two source
     rows for one key have no defined winner); CHECK constraints and
@@ -1685,8 +1698,9 @@ def upsert_delta(spark: SparkSession, df: DataFrame, path: str,
     matched = tgt.join(src_keys, key_cols, "left_semi")
     affected_abs = [r["__dv_src"] for r in
                     matched.select("__dv_src").distinct().collect()]
+    live_adds = snap.live.materialize(allow_dv=True)
     rel_of: dict[str, str] = {}
-    for rel in snap.live.materialize(allow_dv=True):
+    for rel in live_adds:
         dec = urllib.parse.unquote(rel)
         rel_of[os.path.abspath(
             dec if os.path.isabs(dec) else os.path.join(path, dec))] = rel
@@ -1696,9 +1710,15 @@ def upsert_delta(spark: SparkSession, df: DataFrame, path: str,
     survivors = (tgt.filter(F.col("__dv_src").isin(affected_abs))
                  .join(src_keys, key_cols, "left_anti"))
     rel_dir = f"_data_m{latest + 1}-{uuid.uuid4().hex[:8]}"
-    w = src.unionByName(survivors.select(*cols)).write
+    out = src.unionByName(survivors.select(*cols))
     if part_cols:
-        w = w.partitionBy(*part_cols)
+        w = out.write.partitionBy(*part_cols)
+    else:
+        # as many files as the rewritten bytes fill at the target size,
+        # so an upserted table is already compact
+        nbytes = _plan_bytes(src) + sum(
+            live_adds[rel_of[a]].get("size") or 0 for a in affected_abs)
+        w = _target_sized(spark, out, nbytes).write
     w.parquet(os.path.join(path, rel_dir))
     adds = _collect_written_adds(
         os.path.join(path, rel_dir), rel_dir, part_cols, spark=spark)
@@ -1725,6 +1745,13 @@ def upsert_delta(spark: SparkSession, df: DataFrame, path: str,
         path, latest + 1, "MERGE",
         {"matchedPredicates": json.dumps([{"actionType": "update"}])},
         actions, now_ms, app_id, txn_version)
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df`` (no job): a parquet scan's file
+    bytes, a local relation's row bytes."""
+    return int(str(df._jdf.queryExecution().optimizedPlan().stats()
+                   .sizeInBytes()))
 
 
 def _num_records(absf: str) -> tuple[str, int]:
@@ -1925,18 +1952,26 @@ def append_delta(
 
 
 def compact_delta(spark: SparkSession, path: str) -> int:
-    """Rewrite the table's LIVE rows — deletion vectors applied — into
-    fresh data files and commit ``remove(old) + add(new)`` with
-    ``dataChange=false`` on both sides: Delta's OPTIMIZE lifecycle step,
-    and the maintenance this module's own DV docstrings point DV-heavy
-    tables at. Readers before/after see identical rows; old files stay
-    on disk for time travel; the streaming source skips the commit
-    entirely (no new rows — delta-spark's own dataChange=false rule).
-    Published through the LogStore conditional put, so a racing writer
-    loses cleanly. Column-mapped tables refuse (rewriting them requires
-    writing physical names + field ids into footers, which this writer
-    does not do); append-only tables are fine — the spec's appendOnly
-    forbids DATA-changing removes, and a compaction changes none."""
+    """Delta's OPTIMIZE: rewrite the files that need it and commit
+    ``remove(old) + add(new)`` with ``dataChange=false`` on both sides.
+    The target size is ``spark.sql.files.maxPartitionBytes``; within each
+    partition tuple a file is rewritten when it carries a deletion vector
+    (its deleted rows are dropped), or when it is one of two or more
+    files under half the target. The chosen files are read in one scan;
+    an unpartitioned table writes them as ``ceil(bytes / target)`` files
+    (cut by :func:`tableformat._target_sized`), a partitioned one as one
+    file per tuple (a hash repartition on the partition columns). Every
+    other file stays referenced as it is. When no file needs it,
+    nothing is written or committed and the current version is
+    returned, so compacting twice is a no-op the second time. Readers
+    before/after see identical rows; old files stay on disk for time
+    travel; the streaming source skips the commit entirely (no new rows
+    — delta-spark's own dataChange=false rule). Published through the
+    LogStore conditional put, so a racing writer loses cleanly.
+    Column-mapped tables refuse (rewriting them requires writing
+    physical names + field ids into footers, which this writer does not
+    do); append-only tables are fine — the spec's appendOnly forbids
+    DATA-changing removes, and a compaction changes none."""
     path = os.path.abspath(path)
     snap = _snapshot_state(spark, path, None)
     latest, meta = snap.version, snap.meta
@@ -1958,12 +1993,27 @@ def compact_delta(spark: SparkSession, path: str) -> int:
             "implemented; use the table's native engine (OPTIMIZE)"
         )
     adds_all = snap.live.materialize(allow_dv=True)
-    if not adds_all:
-        return latest  # empty table: nothing to compact
+    target = _target_file_bytes(spark)
+    bins = _files_to_compact(
+        [(rel, tuple(sorted((a.get("partitionValues") or {}).items())),
+          a.get("size"), bool(a.get("deletionVector")))
+         for rel, a in adds_all.items()], target)
+    if not bins:
+        return latest  # nothing to compact
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
     part_cols = meta.get("partitionColumns") or []
 
-    live = read_delta(spark, path)
+    # one scan of the chosen files, so one deletion-vector anti-join
+    chosen = sorted(rel for fs in bins.values() for rel, _s in fs)
+    live = _scan(spark, path, meta,
+                 [(rel, adds_all[rel].get("partitionValues") or {},
+                   adds_all[rel].get("deletionVector")) for rel in chosen])
+    nbytes = sum(sz for fs in bins.values() for _r, sz in fs)
+    if part_cols:
+        # each tuple's rows meet in one write task: one file per tuple
+        live = live.repartition(_n_target_files(nbytes, target), *part_cols)
+    else:
+        live = _target_sized(spark, live, nbytes)
     rel_dir = f"_data_c{latest + 1}-{uuid.uuid4().hex[:8]}"
     out_dir = os.path.join(path, rel_dir)
     writer = live.select(*[f.name for f in schema.fields]).write
@@ -1974,7 +2024,7 @@ def compact_delta(spark: SparkSession, path: str) -> int:
     now_ms = int(_time.time() * 1000)
     removes = [{"remove": {"path": rel, "dataChange": False,
                            "deletionTimestamp": now_ms}}
-               for rel in sorted(adds_all)]
+               for rel in chosen]
     adds = []
     for a in _collect_written_adds(out_dir, rel_dir, part_cols,
                                    spark=spark):

@@ -341,7 +341,8 @@ def read_iceberg_changes(
                       if (json.loads(t[5]) if t[5] else {})]
             if scoped:
                 _scoped_spec_guard(
-                    path, sid, {t[11] for t in scoped},
+                    # t[-1]: the spec id appended to each entry above
+                    path, sid, {t[-1] for t in scoped},
                     {int(m.get("partition_spec_id", 0) or 0)
                      for m in _manifest_paths(meta, parent)
                      if m.get("content", 0) == 0})

@@ -51,6 +51,7 @@ import uuid
 from .avro_ocf import write_ocf
 from .tableformat import (
     _commit_dir_of,
+    _committed_ms,
     _publish,
     _read_manifest,
     current_version,
@@ -378,7 +379,7 @@ def export_iceberg(path: str, version: int | None = None) -> str:
             m["fields"] = sub
         name_mapping.append(m)
 
-    committed_ms = int(float(man.get("committed_at", 0)) * 1000)
+    committed_ms = _committed_ms(man) or 0
     table_loc = os.path.abspath(path)
     token = str(uuid.uuid5(
         uuid.NAMESPACE_URL,

@@ -100,7 +100,12 @@ from .iceberg_export import (
     _publish_version,
     _snapshot_id,
 )
-from .tableformat import ConcurrentCommitError  # noqa: F401  (re-exported)
+from .tableformat import (
+    ConcurrentCommitError,  # noqa: F401  (re-exported)
+    _files_to_compact,
+    _target_file_bytes,
+    _target_sized,
+)
 
 _META_DIR = "metadata"
 
@@ -321,6 +326,8 @@ def _decode_manifest(arg, want_bounds: bool = True) -> list[tuple]:
             # manifest's added_snapshot_id) — changelog readers need it
             # to skip older entries riding in merged manifests
             None if esnap is None else int(esnap),
+            # compaction picks files by size
+            int(d.get("file_size_in_bytes") or 0),
         ))
     return out
 
@@ -335,7 +342,8 @@ def _live_entries_df(spark: SparkSession,
         "status int, file_path string, file_format string, "
         "record_count bigint, content int, partition_json string, "
         "lower_json string, upper_json string, seq bigint, "
-        "equality_json string, entry_snapshot_id bigint"
+        "equality_json string, entry_snapshot_id bigint, "
+        "file_size bigint"
     )
     if len(data_manifests) <= _DRIVER_DECODE_MAX_MANIFESTS:
         rows = [t for m in data_manifests for t in _decode_manifest(m)]
@@ -1858,9 +1866,6 @@ def _cow_overwrite(spark: SparkSession, path: str, column: str,
     live rows, commit ONE overwrite snapshot with the old files marked
     DELETED in rewritten manifests and the transform's output appended
     as fresh files."""
-    from .avro_ocf import read_ocf as _read_ocf
-    from .avro_ocf import write_ocf as _write_ocf
-
     versions = metadata_versions(path)
     cur_v = max(versions)
     meta = read_metadata(path, cur_v)
@@ -1904,92 +1909,8 @@ def _cow_overwrite(spark: SparkSession, path: str, column: str,
     rel_files = _write_data_files(surv, path, part_fields,
                                   f"cowdel-{token}")
 
-    carried: list[dict] = []
-    rewritten: list[dict] = []
-    n_removed_files = n_removed_rows = 0
-    for i, m in enumerate(_manifest_paths(meta, snap)):
-        mpath = _from_uri(m["manifest_path"])
-        mseq = int(m.get("sequence_number", 0) or 0)
-        madded = m.get("added_snapshot_id")
-        if m.get("content", 0) == 1:
-            carried.append(m)  # delete manifests: still apply to carried
-            continue
-        oschema, ometa, oentries = _read_ocf(mpath)
-        touches = any(
-            _norm_path((e.get("data_file") or {}).get("file_path") or "")
-            in affected
-            for e in oentries if e.get("status", 1) != 2
-        )
-        if not touches:
-            carried.append(m)
-            continue
-        new_entries = []
-        n_exist = exist_rows = n_del = del_rows = 0
-        own_del = own_del_rows = 0
-        min_seq = seq
-        for e in oentries:
-            st = e.get("status", 1)
-            d = e["data_file"]
-            eseq = e.get("sequence_number")
-            eseq = int(eseq) if eseq is not None else mseq
-            efseq = e.get("file_sequence_number")
-            efseq = int(efseq) if efseq is not None else eseq
-            ne = dict(e)
-            ne["sequence_number"] = eseq  # explicit: no inheritance after
-            ne["file_sequence_number"] = efseq  # a rewrite, per the spec
-            if st == 2:
-                # prior tombstones: this repo's readers only need them in
-                # their own snapshot's manifests, but iceberg-java keeps
-                # DELETED entries through manifest rewrites until their
-                # snapshot expires — carry them (every reader skips them
-                # via the entry snapshot_id filter) rather than dropping
-                # entries a stricter external engine expects to see
-                n_del += 1
-                del_rows += int(d.get("record_count", 0))
-                min_seq = min(min_seq, eseq)
-                new_entries.append(ne)
-                continue
-            removed_here = _norm_path(d.get("file_path") or "") in affected
-            if removed_here:
-                ne["status"] = 2
-                ne["snapshot_id"] = snapshot_id
-                n_del += 1
-                del_rows += int(d.get("record_count", 0))
-                own_del += 1
-                own_del_rows += int(d.get("record_count", 0))
-            else:
-                ne["status"] = 0
-                ne["snapshot_id"] = (int(e["snapshot_id"])
-                                     if e.get("snapshot_id") is not None
-                                     else madded)
-                n_exist += 1
-                exist_rows += int(d.get("record_count", 0))
-            min_seq = min(min_seq, eseq)
-            new_entries.append(ne)
-        new_mpath = os.path.join(_meta_dir(path), f"{token}-rw{i}.avro")
-        _write_ocf(new_mpath, oschema, new_entries,
-                   metadata={k: v.decode() if isinstance(v, bytes) else v
-                             for k, v in (ometa or {}).items()
-                             if not k.startswith("avro.")})
-        rewritten.append({
-            "manifest_path": "file://" + new_mpath.replace(os.sep, "/"),
-            "manifest_length": os.path.getsize(new_mpath),
-            "partition_spec_id": m.get("partition_spec_id", 0),
-            "content": 0,
-            "sequence_number": seq, "min_sequence_number": min_seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": 0, "existing_files_count": n_exist,
-            "deleted_files_count": n_del, "added_rows_count": 0,
-            "existing_rows_count": exist_rows,
-            "deleted_rows_count": del_rows,
-            "partitions": None,
-        })
-        # snapshot summary counts THIS commit's removals only — carried
-        # prior tombstones are in the manifest header counts, not here
-        n_removed_files += own_del
-        n_removed_rows += own_del_rows
-
-    records = carried + rewritten
+    records, n_removed_files, n_removed_rows = _rewrite_manifests(
+        path, meta, snap, affected, snapshot_id, seq, token)
     n_added_files = added_rows = 0
     if rel_files:
         man_path, n_added_files, added_rows = _data_manifest(
@@ -2014,6 +1935,118 @@ def _cow_overwrite(spark: SparkSession, path: str, column: str,
         snap["snapshot-id"],
         cur_v=cur_v,
     )
+
+
+def _rewrite_manifests(path: str, meta: dict, snap: dict, removed: set,
+                       snapshot_id: int, seq: int, token: str,
+                       replace: bool = False
+                       ) -> tuple[list[dict], int, int]:
+    """The manifest-list records of a commit that removes the data files
+    in ``removed`` (normalized paths) from ``snap``: a data manifest that
+    names none of them is carried by reference; one that does is
+    rewritten with those entries DELETED and the others EXISTING, and
+    delete manifests are carried. A ``replace`` (compaction) drops the
+    delete manifests instead — they apply to no file it keeps — and
+    leaves the removed entries out rather than marking them DELETED, as a
+    full rewrite would: the old files stay reachable only through older
+    snapshots, so an orphan sweep collects them once those expire. A
+    manifest left with no entry is dropped. Returns ``(records, files
+    removed, rows removed)``."""
+    from .avro_ocf import write_ocf as _write_ocf
+
+    carried: list[dict] = []
+    rewritten: list[dict] = []
+    n_removed_files = n_removed_rows = 0
+    for i, m in enumerate(_manifest_paths(meta, snap)):
+        mpath = _from_uri(m["manifest_path"])
+        mseq = int(m.get("sequence_number", 0) or 0)
+        madded = m.get("added_snapshot_id")
+        if m.get("content", 0) == 1:
+            if not replace:  # delete manifests: still apply to carried
+                carried.append(m)
+            continue
+        oschema, ometa, oentries = read_ocf(mpath)
+        touches = any(
+            _norm_path((e.get("data_file") or {}).get("file_path") or "")
+            in removed
+            for e in oentries if e.get("status", 1) != 2
+        )
+        if not touches:
+            carried.append(m)
+            continue
+        new_entries = []
+        n_exist = exist_rows = n_del = del_rows = 0
+        # the snapshot summary counts THIS commit's removals only —
+        # carried prior tombstones are in the manifest header counts
+        own_del = own_del_rows = 0
+        min_seq = seq
+        for e in oentries:
+            st = e.get("status", 1)
+            d = e["data_file"]
+            eseq = e.get("sequence_number")
+            eseq = int(eseq) if eseq is not None else mseq
+            efseq = e.get("file_sequence_number")
+            efseq = int(efseq) if efseq is not None else eseq
+            ne = dict(e)
+            ne["sequence_number"] = eseq  # explicit: no inheritance after
+            ne["file_sequence_number"] = efseq  # a rewrite, per the spec
+            if st == 2:
+                # prior tombstones: this repo's readers only need them in
+                # their own snapshot's manifests, but iceberg-java keeps
+                # DELETED entries through manifest rewrites until their
+                # snapshot expires — carry them (every reader skips them
+                # via the entry snapshot_id filter) rather than dropping
+                # entries a stricter external engine expects to see
+                n_del += 1
+                del_rows += int(d.get("record_count", 0))
+                min_seq = min(min_seq, eseq)
+                new_entries.append(ne)
+                continue
+            removed_here = _norm_path(d.get("file_path") or "") in removed
+            if removed_here and replace:
+                own_del += 1
+                own_del_rows += int(d.get("record_count", 0))
+                continue
+            if removed_here:
+                ne["status"] = 2
+                ne["snapshot_id"] = snapshot_id
+                n_del += 1
+                del_rows += int(d.get("record_count", 0))
+                own_del += 1
+                own_del_rows += int(d.get("record_count", 0))
+            else:
+                ne["status"] = 0
+                ne["snapshot_id"] = (int(e["snapshot_id"])
+                                     if e.get("snapshot_id") is not None
+                                     else madded)
+                n_exist += 1
+                exist_rows += int(d.get("record_count", 0))
+            min_seq = min(min_seq, eseq)
+            new_entries.append(ne)
+        n_removed_files += own_del
+        n_removed_rows += own_del_rows
+        if not new_entries:
+            continue
+        new_mpath = os.path.join(_meta_dir(path), f"{token}-rw{i}.avro")
+        _write_ocf(new_mpath, oschema, new_entries,
+                   metadata={k: v.decode() if isinstance(v, bytes) else v
+                             for k, v in (ometa or {}).items()
+                             if not k.startswith("avro.")})
+        rewritten.append({
+            "manifest_path": "file://" + new_mpath.replace(os.sep, "/"),
+            "manifest_length": os.path.getsize(new_mpath),
+            "partition_spec_id": m.get("partition_spec_id", 0),
+            "content": 0,
+            "sequence_number": seq, "min_sequence_number": min_seq,
+            "added_snapshot_id": snapshot_id,
+            "added_files_count": 0, "existing_files_count": n_exist,
+            "deleted_files_count": n_del, "added_rows_count": 0,
+            "existing_rows_count": exist_rows,
+            "deleted_rows_count": del_rows,
+            "partitions": None,
+        })
+
+    return carried + rewritten, n_removed_files, n_removed_rows
 
 
 def _ensure_unpartitioned_spec(newmeta: dict) -> int:
@@ -2180,11 +2213,42 @@ def _patch_equality_ids(man_path: str, eq_ids: list[int],
               })
 
 
+def _under_deletes(del_entries: list[tuple]):
+    """A predicate over data entry tuples: may a live delete file remove
+    rows of this file? By the spec's sequence rules — a position delete
+    applies to data with ``data_seq <= delete_seq`` (any file: which
+    files it names is not read here), an equality delete to data with
+    ``data_seq < delete_seq`` in its partition, or everywhere when its
+    partition tuple is empty."""
+    pos_max = max((d[8] for d in del_entries if d[4] == 1), default=None)
+    eq_max: dict[str, int] = {}
+    for d in del_entries:
+        if d[4] == 2:
+            eq_max[d[5]] = max(eq_max.get(d[5], d[8]), d[8])
+
+    def under(t: tuple) -> bool:
+        if pos_max is not None and t[8] <= pos_max:
+            return True
+        return t[8] < max(eq_max.get("{}", -1), eq_max.get(t[5], -1))
+
+    return under
+
+
 def compact_iceberg(spark: SparkSession, path: str) -> int:
-    """Rewrite the table's live rows (deletes applied) into fresh data
-    files and commit a REPLACE snapshot referencing only them — the
-    merge-on-read lifecycle's compaction step (Iceberg's
-    rewrite_data_files). Old files stay on disk for time travel until
+    """Iceberg's ``rewrite_data_files``: rewrite the data files that need
+    it and commit a REPLACE snapshot. The target size is
+    ``spark.sql.files.maxPartitionBytes``; within each partition tuple a
+    data file is rewritten when a live delete file may apply to it (its
+    deleted rows are dropped), or when it is one of two or more files
+    under half the target. The rewritten files are written as
+    ``ceil(bytes / target)`` files (cut by
+    :func:`tableformat._target_sized`; one file per tuple on a
+    partitioned spec); every other data file is
+    carried by reference, and the delete files, which then apply to
+    nothing, are dropped. When no file needs it and no delete file is
+    live, nothing is written or committed and the current metadata
+    version is returned, so compacting twice is a no-op the second time.
+    Old files stay on disk for time travel until
     :func:`expire_iceberg_snapshots` drops the snapshots naming them.
     Readers before/after see identical rows; the streaming source skips
     the replace snapshot under ``skip_rewrites`` (its files carry no new
@@ -2205,23 +2269,45 @@ def compact_iceberg(spark: SparkSession, path: str) -> int:
     )
     part_fields = _resolve_part_fields(spec_fields, fields)
 
-    live = read_iceberg_table(spark, path)
-    typed = live.select(*[
-        F.col(f"`{f['name']}`").cast(_spark_type(f["type"]))
-        for f in fields
-    ])
+    data_mans, del_mans = _split_manifests(meta, snap)
+    entries = _live_entry_tuples(spark, data_mans)
+    del_entries = _live_entry_tuples(spark, del_mans)
+    target = _target_file_bytes(spark)
+    under = _under_deletes(del_entries)
+    bins = _files_to_compact(
+        [(t, t[5], t[11], under(t)) for t in entries], target)
+    if not bins and not del_entries:
+        return cur_v  # nothing to compact
+    chosen = [t for fs in bins.values() for t, _s in fs]
+
     token = uuid.uuid4().hex
-    rel_files = _write_data_files(typed, path, part_fields,
-                                  f"compact-{token}")
+    rel_files: list[tuple] = []
+    if chosen:
+        typed = _assemble_read(
+            spark, meta, fields, chosen, del_entries,
+        ).select(*[
+            F.col(f"`{f['name']}`").cast(_spark_type(f["type"]))
+            for f in fields
+        ])
+        if not part_fields:
+            typed = _target_sized(
+                spark, typed, sum(sz for fs in bins.values() for _t, sz in fs))
+        rel_files = _write_data_files(typed, path, part_fields,
+                                      f"compact-{token}")
     seq = int(meta.get("last-sequence-number", 0)) + 1
     snapshot_id = _snapshot_id(uuid.uuid4().int)
-    man_path, n_files, total_rows = _data_manifest(
-        path, rel_files, fields, part_fields, spec_fields, spec_id,
-        schema, seq, snapshot_id, token, spark=spark)
-    rec = _manifest_list_record(
-        man_path, spec_id, 0, seq, snapshot_id, n_files, total_rows)
+    records, _n_removed, _rows_removed = _rewrite_manifests(
+        path, meta, snap, {_norm_path(t[1]) for t in chosen},
+        snapshot_id, seq, token, replace=True)
+    n_files = total_rows = 0
+    if rel_files:
+        man_path, n_files, total_rows = _data_manifest(
+            path, rel_files, fields, part_fields, spec_fields, spec_id,
+            schema, seq, snapshot_id, token, spark=spark)
+        records.append(_manifest_list_record(
+            man_path, spec_id, 0, seq, snapshot_id, n_files, total_rows))
     list_path = _write_manifest_list(
-        path, snapshot_id, seq, token, [rec], snap["snapshot-id"])
+        path, snapshot_id, seq, token, records, snap["snapshot-id"])
     now_ms = _commit_ms(rel_files, list_path)
     newmeta = json.loads(json.dumps(meta))
     return _commit_snapshot(

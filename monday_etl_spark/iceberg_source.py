@@ -394,7 +394,8 @@ def _changelog_units(path: str, snap: dict, meta: dict,
         scoped = [t for t in added_eq if json.loads(t[5] or "{}")]
         if scoped and parent is not None:
             _scoped_spec_guard(
-                path, sid, {t[11] for t in scoped},
+                # t[-1]: the spec id appended to each entry above
+                path, sid, {t[-1] for t in scoped},
                 {int(m.get("partition_spec_id", 0) or 0)
                  for m in _manifest_paths(meta, parent)
                  if m.get("content", 0) == 0})

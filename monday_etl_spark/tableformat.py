@@ -469,11 +469,23 @@ def _commit(path: str, manifest: dict) -> None:
 
     # wall-clock commit stamp: powers read_as_of / vacuum retention windows.
     # Clock skew across writers only blurs AS OF resolution, never
-    # correctness — versions stay totally ordered by number
-    manifest.setdefault("committed_at", time.time())
+    # correctness — versions stay totally ordered by number. Integer
+    # milliseconds keep the manifest's length independent of the clock
+    # (13 digits until 2286); read it back through ``_committed_ms``
+    manifest.setdefault("committed_at", int(time.time() * 1000))
     os.makedirs(os.path.join(path, _MANIFESTS), exist_ok=True)
     _publish(_manifest_path(path, manifest["version"]), json.dumps(manifest),
              hint=(_hint_path(path), str(manifest["version"])))
+
+
+def _committed_ms(man: dict) -> int | None:
+    """A manifest's commit stamp in unix milliseconds, or None when it has
+    none. New manifests stamp integer milliseconds; older ones stamped
+    float seconds, told apart by their JSON type."""
+    at = man.get("committed_at")
+    if at is None or isinstance(at, int):
+        return at
+    return int(float(at) * 1000)
 
 
 def _new_commit_dir(path: str, version: int) -> str:
@@ -1348,6 +1360,64 @@ def merge_versioned(spark: SparkSession, path: str,
         touched, schema=schema, txn=txn)
 
 
+def _target_file_bytes(spark: SparkSession) -> int:
+    """The size the Delta and Iceberg writers aim a data file at: Spark's
+    own scan split, ``spark.sql.files.maxPartitionBytes``."""
+    return spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+
+
+def _n_target_files(nbytes: int, target: int) -> int:
+    """``ceil(nbytes / target)``, at least one and at most the largest
+    partition count Spark takes: an unknown size (Catalyst's default
+    estimate is ``Long.MaxValue``) coalesces to no fewer partitions than
+    the frame has."""
+    return min(max(1, -(-int(nbytes) // target)), 2**31 - 1)
+
+
+def _target_sized(spark: SparkSession, df: DataFrame,
+                  nbytes: int) -> DataFrame:
+    """``df`` in ``ceil(nbytes / target)`` partitions, so its write
+    emits files of about the target size. The cut is a narrow
+    ``coalesce`` when that is no fewer tasks than Spark's own scan split
+    of ``nbytes`` would run (``FilePartition.maxSplitBytes``: the target,
+    but no less than ``openCostInBytes`` or the bytes spread over every
+    core) — a rewrite of a few MB, or one of many target-sized files.
+    In between, a ``coalesce`` would pull the scan and joins above it
+    onto fewer cores, so the cut is a ``repartition`` — hashed on every
+    column, which needs none of round-robin's sort for deterministic
+    retries."""
+    conf = spark._jsparkSession.sessionState().conf()
+    target = conf.filesMaxPartitionBytes()
+    n = _n_target_files(nbytes, target)
+    split = min(target, max(conf.filesOpenCostInBytes(),
+                            nbytes // spark.sparkContext.defaultParallelism))
+    if n >= _n_target_files(nbytes, split):
+        return df.coalesce(n)
+    return df.repartition(n, *df.columns)
+
+
+def _files_to_compact(files, target: int) -> dict:
+    """Compaction's selection rule for Delta and Iceberg: ``files`` are
+    ``(name, partition key, size in bytes, must rewrite)``; the result
+    is ``{partition key: [(name, size)]}`` of the files to rewrite. A file
+    is small below half of ``target``, so a file compaction just wrote
+    never counts again. Within a partition the rule takes every file that
+    must be rewritten (it carries deletes) and, when the partition holds
+    two or more small files, every small file; a lone small file is left
+    alone. Every other file is carried forward by reference."""
+    by_part: dict = {}
+    for name, key, size, forced in files:
+        by_part.setdefault(key, []).append((name, size or 0, forced))
+    out = {}
+    for key, fs in by_part.items():
+        small = {name for name, size, _f in fs if size < target / 2}
+        pick = [(name, size) for name, size, forced in fs
+                if forced or (len(small) >= 2 and name in small)]
+        if pick:
+            out[key] = pick
+    return out
+
+
 @_retrying
 def compact_versioned(spark: SparkSession, path: str,
                       max_files_per_bucket: int = 1) -> int:
@@ -1439,8 +1509,8 @@ def version_as_of(path: str, ts: float) -> int:
     has no version that early."""
     best = None
     for v in list_versions(path):
-        at = _read_manifest(path, v).get("committed_at")
-        if at is None or at <= ts:
+        at = _committed_ms(_read_manifest(path, v))
+        if at is None or at / 1000 <= ts:
             best = v
     if best is None:
         raise FileNotFoundError(
@@ -1459,14 +1529,16 @@ def read_as_of(spark: SparkSession, path: str, ts: float) -> DataFrame:
 def table_history(path: str) -> list[dict]:
     """DESCRIBE HISTORY: one dict per retained version — version number,
     operation kind (write/merge/delete/compact/zorder/rename/drop_column),
-    commit timestamp, and file/bucket counts. Metadata-only."""
+    commit timestamp (unix seconds), and file/bucket counts.
+    Metadata-only."""
     out = []
     for v in list_versions(path):
         man = _read_manifest(path, v)
+        at = _committed_ms(man)
         out.append({
             "version": v,
             "operation": man.get("operation"),
-            "committed_at": man.get("committed_at"),
+            "committed_at": None if at is None else at / 1000,
             "n_buckets": len(man["buckets"]),
             "n_files": sum(len(fs) for fs in man["buckets"].values()),
         })
@@ -1528,8 +1600,8 @@ def vacuum(path: str, keep_last: int = 1,
     keep = set(versions[-keep_last:] if keep_last > 0 else [])
     if retain_after is not None:
         for v in versions:
-            at = _read_manifest(path, v).get("committed_at")
-            if at is not None and at >= retain_after:
+            at = _committed_ms(_read_manifest(path, v))
+            if at is not None and at / 1000 >= retain_after:
                 keep.add(v)
     # tagged versions are pinned: a tag is an audit anchor ("the table the
     # model trained on"), so vacuum never collects what one points at

@@ -27,6 +27,9 @@ def _testdata_vintage_guard():
 def spark():
     from monday_etl_spark.session import get_spark
 
-    s = get_spark("monday-etl-spark-tests", shuffle_partitions=8)
+    # the status store keeps every job of the run: tests that compare job
+    # ids before and after a call must not see older jobs evicted
+    s = get_spark("monday-etl-spark-tests", shuffle_partitions=8,
+                  extra_conf={"spark.ui.retainedJobs": "100000"})
     yield s
     s.stop()

@@ -88,7 +88,7 @@ FORMATS = {
 }
 
 
-def _setup_restore(spark, tmp_path):
+def _setup_delta_appended(spark, tmp_path):
     path = _cdf_table(spark, tmp_path)
     di.append_delta(spark, _df(spark, 5), path)
     return path
@@ -125,9 +125,9 @@ SITES = {
     "delta_dv_delete": ("delta", _cdf_table,
                         lambda spark, p: di.delete_delta_where(
                             spark, p, "id", 2, 4)),
-    "delta_compact": ("delta", _cdf_table,
+    "delta_compact": ("delta", _setup_delta_appended,
                       lambda spark, p: di.compact_delta(spark, p)),
-    "delta_restore": ("delta", _setup_restore,
+    "delta_restore": ("delta", _setup_delta_appended,
                       lambda spark, p: di.restore_delta(spark, p, 0)),
     "delta_export": ("delta", _house,
                      lambda spark, p: _published(export_delta_log(p))),

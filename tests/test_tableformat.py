@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from monday_etl_spark.tableformat import (
     current_version,
     list_versions,
@@ -340,6 +342,43 @@ def test_history_as_of_and_retention_window(spark, tmp_path):
     dropped = vacuum(path, keep_last=1, retain_after=stamps[1])
     assert dropped == [1]
     assert read_version(spark, path).count() == 201
+
+
+def test_commit_stamp_is_fixed_width(spark, tmp_path, monkeypatch):
+    """Manifests stamp integer milliseconds: two commits of the same
+    content write manifests of equal length whatever the clock reads, and
+    TIMESTAMP AS OF resolves as it did, legacy float-second stamps too."""
+    import json
+    import time
+
+    from monday_etl_spark import tableformat as tf
+
+    src = str(tmp_path / "src")
+    write_versioned(_base_df(spark), src, key="id", n_buckets=N_BUCKETS)
+    base = {k: v for k, v in tf._read_manifest(src, 1).items()
+            if k != "committed_at"}
+    sizes = []
+    for i, now in enumerate((1700000000.5, 1700000000.123456)):
+        dst = str(tmp_path / f"c{i}")
+        with monkeypatch.context() as m:
+            m.setattr(time, "time", lambda now=now: now)
+            tf._commit(dst, dict(base))
+        sizes.append(os.path.getsize(tf._manifest_path(dst, 1)))
+        assert tf.version_as_of(dst, now) == 1
+        assert tf.table_history(dst)[0]["committed_at"] == \
+            int(now * 1000) / 1000
+    assert sizes[0] == sizes[1]
+    assert tf.version_as_of(str(tmp_path / "c1"), 1700000000.123) == 1
+
+    # a manifest from before the integer stamp: float unix seconds
+    legacy = str(tmp_path / "legacy")
+    os.makedirs(os.path.join(legacy, "_manifests"))
+    with open(tf._manifest_path(legacy, 1), "w") as fh:
+        json.dump(dict(base, committed_at=1700000000.25), fh)
+    assert tf._committed_ms(tf._read_manifest(legacy, 1)) == 1700000000250
+    assert tf.version_as_of(legacy, 1700000000.25) == 1
+    with pytest.raises(FileNotFoundError):
+        tf.version_as_of(legacy, 1700000000.2)
 
 
 def test_rebucket_changes_layout_and_merges_route_correctly(spark, tmp_path):

@@ -40,7 +40,10 @@ from monday_etl_spark.iceberg_import import (  # noqa: E402
 from monday_etl_spark.io import load_table  # noqa: E402
 from monday_etl_spark.session import get_spark  # noqa: E402
 
-ROOT = "/root/repo/.scratch/changelog_rehearsal"
+# written inside this tool's own checkout, so a second checkout (the
+# other side of an A/B) never touches this one's tables
+ROOT = str(Path(__file__).resolve().parents[1] / ".scratch"
+           / "changelog_rehearsal")
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 _SCHEMA_JSON = json.dumps({"type": "struct", "fields": [

@@ -1,10 +1,11 @@
 #!/usr/bin/env python
 """Measure the r10 bridge surfaces at sf0.1 vs sf1 (10x data / 10x file
 count): the executor-side DV DELETE, the post-delete read, the change
-feed, the v2/sidecar checkpoint write + post-clean re-read, the
-transform-routed Iceberg append (bucket[4] + days), and the WAP branch
-publish. One fresh table per scale under .scratch/; prints one JSON
-line per scale. Usage: python tools/delta_scale_rehearsal.py
+feed, the v2/sidecar checkpoint write + post-clean re-read, Delta
+compaction and upsert, the transform-routed Iceberg append (bucket[4] +
+days), and the WAP branch publish. One fresh table per scale under
+.scratch/; prints one JSON line per scale. Usage: python
+tools/delta_scale_rehearsal.py
 """
 
 from __future__ import annotations
@@ -22,8 +23,11 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from monday_etl_spark.delta_cdf import read_delta_changes  # noqa: E402
 from monday_etl_spark.delta_import import (  # noqa: E402
+    _snapshot_state,
+    compact_delta,
     delete_delta_where,
     read_delta,
+    upsert_delta,
     write_checkpoint,
 )
 from monday_etl_spark.iceberg_import import (  # noqa: E402
@@ -36,11 +40,14 @@ from monday_etl_spark.iceberg_import import (  # noqa: E402
 from monday_etl_spark.io import load_table  # noqa: E402
 from monday_etl_spark.session import get_spark  # noqa: E402
 
+# every path this tool writes is inside its own checkout, so a second
+# checkout (the other side of an A/B) never touches this one's tables
+CHECKOUT = Path(__file__).resolve().parents[1]
 SCALES = [
     ("sf0.1", "/root/testdata/sf0.1", 24),
-    ("sf1", "/root/repo/.scratch/sf1", 240),
+    ("sf1", str(CHECKOUT / ".scratch" / "sf1"), 240),
 ]
-ROOT = "/root/repo/.scratch/delta_rehearsal"
+ROOT = str(CHECKOUT / ".scratch" / "delta_rehearsal")
 
 _SCHEMA_JSON = json.dumps({"type": "struct", "fields": [
     {"name": "l_orderkey", "type": "long", "nullable": True,
@@ -132,6 +139,28 @@ def main() -> int:
         n2, out["post_ckpt_read_s"] = timed(
             lambda: read_delta(spark, path).count())
         assert n2 == n, f"checkpoint replay lost rows: {n2} != {n}"
+
+        # compaction of the DV-carrying files, a 1/64-key upsert (every
+        # file holds such keys, so it rewrites the whole table), then a
+        # second compaction of what the upsert wrote
+        _, out["compact_s"] = timed(lambda: compact_delta(spark, path))
+        up = (load_table(spark, sf_dir, "lineitem")
+              .filter(F.col("l_orderkey") % 64 == 3)
+              .dropDuplicates(["l_orderkey"])
+              .select(F.col("l_orderkey").cast("long"),
+                      (F.col("l_quantity") + 1.0).cast("double")
+                      .alias("l_quantity"),
+                      F.col("l_extendedprice").cast("double")))
+        _, out["upsert_s"] = timed(
+            lambda: upsert_delta(spark, up, path, ["l_orderkey"]))
+        _, out["compact_after_upsert_s"] = timed(
+            lambda: compact_delta(spark, path))
+        out["files_after"] = len(
+            _snapshot_state(spark, path, None).live.materialize(
+                allow_dv=True))
+        n3, out["post_upsert_read_s"] = timed(
+            lambda: read_delta(spark, path).count())
+        out["rows_after_upsert"] = n3
 
         # transform-routed Iceberg append (bucket[4] + days) + WAP
         ice = os.path.join(ROOT, f"iceberg_{label}")

@@ -38,11 +38,14 @@ from monday_etl_spark.io import load_table  # noqa: E402
 from monday_etl_spark.session import get_spark  # noqa: E402
 from monday_etl_spark.tableformat import write_versioned  # noqa: E402
 
+# every path this tool writes is inside its own checkout, so a second
+# checkout (the other side of an A/B) never touches this one's tables
+CHECKOUT = Path(__file__).resolve().parents[1]
 SCALES = [
     ("sf0.1", "/root/testdata/sf0.1"),
-    ("sf1", "/root/repo/.scratch/sf1"),
+    ("sf1", str(CHECKOUT / ".scratch" / "sf1")),
 ]
-ROOT = "/root/repo/.scratch/iceberg_rehearsal"
+ROOT = str(CHECKOUT / ".scratch" / "iceberg_rehearsal")
 
 
 def timed(fn):
